@@ -66,6 +66,36 @@ def test_stream_epochs_multiply_records(spark, text_input):
     assert res.n_records_out == 9
 
 
+def test_epoch_cache_released_after_submit(spark, tmp_path):
+    # A multi-epoch submit caches its input for its own epochs only.
+    # Left live, the cache answered later submits over the same path
+    # with the old file set: after a 4th file landed, a 2-epoch submit
+    # read 6000 records and a 1-epoch submit 3000.
+    src = tmp_path / "in"
+    src.mkdir()
+
+    def add_file(i):
+        lines = "".join(f"f{i}-{j}\n" for j in range(1000))
+        (src / f"part-{i}.txt").write_text(lines)
+
+    for i in range(3):
+        add_file(i)
+
+    def run(epochs, name):
+        spec = JobSpec(
+            inputs={"t": str(src)},
+            command=["cat"],
+            epochs=epochs,
+            output=str(tmp_path / name),
+        )
+        return submit(spark, spec).n_records_out
+
+    assert run(2, "out1") == 6000
+    add_file(3)
+    assert run(2, "out2") == 8000
+    assert run(1, "out3") == 4000
+
+
 def test_placeholder_child_sees_file_list(spark, text_input, tmp_path):
     out = str(tmp_path / "out")
     child = [

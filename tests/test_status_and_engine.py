@@ -228,8 +228,7 @@ def test_connected_components_deep_chain(spark):
     # A 150-hop path is the adversarial diameter case for label
     # propagation: plain 1-hop flooding needs 150 rounds, but pointer
     # doubling halves label depth per round, so the default
-    # max_iter=20 must be ample. The 2-jump variant also runs (it
-    # exercises the repeated self-join aliasing, see dedup.py).
+    # max_iter=20 must be ample.
     from xlearning_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -238,8 +237,6 @@ def test_connected_components_deep_chain(spark):
     rows = connected_components(pairs).collect()
     assert len(rows) == 151
     assert {r.component for r in rows} == {0}
-    rows2 = connected_components(pairs, doubling_jumps=2).collect()
-    assert {r.component for r in rows2} == {0}
 
 
 def test_default_driver_mem_is_machine_derived_and_clamped(monkeypatch):

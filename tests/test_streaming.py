@@ -374,6 +374,12 @@ def test_neardup_ingest_releases_per_batch_caches(spark, tmp_path):
         spark.createDataFrame(
             [(i, f"w{i} x{i} y{i} z{i} common tail words {i}")], schema
         ).coalesce(1).write.mode("append").parquet(src)
+    # Early exits: a batch whose every doc loses (a near-dup of doc 0,
+    # already in the corpus) and an empty batch.
+    spark.createDataFrame(
+        [(100, "w0 x0 y0 z0 common tail words 0 extra")], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    spark.createDataFrame([], schema).coalesce(1).write.mode("append").parquet(src)
 
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
@@ -385,6 +391,7 @@ def test_neardup_ingest_releases_per_batch_caches(spark, tmp_path):
         corpus, ckpt, threshold=0.5, shingle_size=2,
     )
     assert len(written) >= 4  # several batches actually ran
+    assert 100 not in {r.doc_id for r in spark.read.parquet(corpus).collect()}
     after = set(jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set(), (
         f"neardup_ingest leaked {len(after - before)} persisted RDDs "
@@ -897,6 +904,68 @@ def test_neardup_ingest_backfill_unhinted_path_same_corpus(spark, tmp_path):
             for r in spark.read.parquet(str(tmp_path / mode / "corpus")).collect()
         }
     assert landed["hinted"] == landed["backfill"] == {1, 3, 4, 6}
+
+
+def test_neardup_ingest_driver_and_distributed_verdicts_agree(spark, tmp_path):
+    # The driver verdict (components solved on the driver, batch under
+    # broadcast_batch_limit) and the distributed verdict (forced with
+    # broadcast_batch_limit=0) must land identical rows, schema and
+    # batch ids on dirty input: a null id (it never pairs, so it always
+    # lands), duplicate ids inside a batch, string ids whose string
+    # order differs from their numeric order, a doc too short to
+    # shingle, a batch whose every doc loses and an empty batch.
+    import os
+
+    schema = "doc_id string, text string"
+    batches = [
+        [
+            (None, "alpha beta gamma delta epsilon"),
+            ("d1", "alpha beta gamma delta epsilon"),
+            ("d2", "alpha beta gamma delta zeta"),  # ~ d1 -> drops
+            ("d3", "one two three four five"),
+            ("d3", "one two three four five"),  # duplicate id
+            ("d4", "short"),
+        ],
+        [
+            ("d5", "alpha beta gamma delta omega"),  # ~ corpus d1
+            ("d6", "one two three four six"),  # ~ corpus d3
+        ],
+        [],
+        [
+            ("d9", "red green blue cyan magenta"),
+            ("d10", "red green blue cyan yellow"),  # "d10" < "d9"
+            ("d11", "totally novel words land here"),
+        ],
+    ]
+    landed = {}
+    for mode, limit in (("driver", 1_000_000), ("distributed", 0)):
+        src = str(tmp_path / mode / "src")
+        corpus = str(tmp_path / mode / "corpus")
+        os.makedirs(src)
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+        written = st.neardup_ingest(
+            spark.readStream.format("parquet")
+            .schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .load(src),
+            corpus,
+            str(tmp_path / mode / "ckpt"),
+            threshold=0.5,
+            shingle_size=2,
+            broadcast_batch_limit=limit,
+        )
+        out = spark.read.parquet(corpus)
+        rows = sorted(
+            (tuple(r) for r in out.collect()), key=lambda t: (t[0] is not None, t)
+        )
+        landed[mode] = (rows, out.schema, written)
+    assert landed["driver"] == landed["distributed"]
+    rows, _, written = landed["driver"]
+    assert [r[0] for r in rows] == [None, "d1", "d10", "d11", "d3", "d4"]
+    assert written == [0, 3]
 
 
 def test_streaming_hll_equals_batch_exactly(spark, events_dir, tmp_path):

@@ -256,35 +256,45 @@ def _submit_once(spark: SparkSession, spec: JobSpec) -> JobResult:
             ]
         )
 
-    if spec.epochs > 1:
+    # epoch_replay persists its input DISK_ONLY for this submit only
+    # (the reference's epoch-0 tee dies with its container). Left live,
+    # a later submit over the same root path is answered from it:
+    # Spark's cache lookup matches the plan, not the file listing, so
+    # files added since go unread.
+    replayed = rows if spec.epochs > 1 else None
+    if replayed is not None:
         rows = epoch_replay(rows, spec.epochs).drop("epoch")
 
-    if spec.command is not None:
-        placeholder = spec.input_strategy == "PLACEHOLDER" and spec.epochs == 1
-        out = pipe_lines(
-            rows,
-            spec.command,
-            env=spec.env,
-            # Epoch replay unions partitions, so the per-partition split
-            # only holds in the single-epoch case; multi-epoch falls
-            # back to the broadcast map (P3 shape).
-            input_files_by_partition=assignment if placeholder else None,
-            input_files=(
-                files
-                if spec.input_strategy == "PLACEHOLDER" and not placeholder
-                else None
-            ),
-            out_col="line",
-        )
-    else:
-        out = rows
+    try:
+        if spec.command is not None:
+            placeholder = spec.input_strategy == "PLACEHOLDER" and spec.epochs == 1
+            out = pipe_lines(
+                rows,
+                spec.command,
+                env=spec.env,
+                # Epoch replay unions partitions, so the per-partition split
+                # only holds in the single-epoch case; multi-epoch falls
+                # back to the broadcast map (P3 shape).
+                input_files_by_partition=assignment if placeholder else None,
+                input_files=(
+                    files
+                    if spec.input_strategy == "PLACEHOLDER" and not placeholder
+                    else None
+                ),
+                out_col="line",
+            )
+        else:
+            out = rows
 
-    if spec.output is None:
-        return JobResult(None, out.count(), False, files)
+        if spec.output is None:
+            return JobResult(None, out.count(), False, files)
 
-    if spec.output_format == "parquet":
-        write_parquet(out, spec.output)
-    else:
-        write_gzip_text(out.select(F.col("line").cast("string")), spec.output)
-    n = spark.read.parquet(spec.output).count() if spec.output_format == "parquet" else spark.read.text(spec.output).count()
-    return JobResult(spec.output, n, is_committed(spec.output, spark), files)
+        if spec.output_format == "parquet":
+            write_parquet(out, spec.output)
+        else:
+            write_gzip_text(out.select(F.col("line").cast("string")), spec.output)
+        n = spark.read.parquet(spec.output).count() if spec.output_format == "parquet" else spark.read.text(spec.output).count()
+        return JobResult(spec.output, n, is_committed(spec.output, spark), files)
+    finally:
+        if replayed is not None:
+            replayed.unpersist()

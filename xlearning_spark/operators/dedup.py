@@ -16,8 +16,11 @@ mandated LLM-pipeline extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Any, NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from xlearning_spark.functions import tokens, with_shingle_hashes
@@ -527,30 +530,72 @@ def _cc_local(nodes, src_idx, dst_idx):
     raise RuntimeError("local connected_components did not converge")
 
 
+class DriverComponents(NamedTuple):
+    """Components solved on the driver (:func:`solve_components`):
+    ``nodes`` holds the distinct ids in ascending order and
+    ``comp[i]`` the index in ``nodes`` of node i's component, which is
+    its minimum member (so ``nodes[comp]`` are the component ids)."""
+
+    nodes: Any  # numpy array of ids
+    comp: Any  # numpy array of indices into nodes
+    id_type: DataType
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The (id, component) frame :func:`connected_components` returns."""
+        import pandas as pd
+
+        schema = StructType(
+            [
+                StructField("id", self.id_type, False),
+                StructField("component", self.id_type, False),
+            ]
+        )
+        if len(self.nodes) == 0:
+            return spark.createDataFrame([], schema)
+        out = pd.DataFrame({"id": self.nodes, "component": self.nodes[self.comp]})
+        return spark.createDataFrame(out, schema=schema)
+
+
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    doubling_jumps: int = 1,
     final_ckpt_out: list[DataFrame] | None = None,
     driver_edge_limit: int = 2_000_000,
 ) -> DataFrame:
     """Min-label propagation over dup pairs -> (id, component) groups.
 
-    Each round takes the min label over the 1-hop neighborhood, then
-    compresses paths by jumping every label to its label's label
-    (pointer doubling). Label depth halves per round, so convergence
-    is ~log2(diameter) rounds, not diameter rounds — a 1M-hop chain
-    converges within the default ``max_iter``. A graph that still
-    hasn't converged raises instead of returning wrong groups.
+    :func:`solve_components` does the work; a graph it solves on the
+    driver comes back as a local frame of its arrays.
+    """
+    sol = solve_components(
+        pairs, max_iter, checkpoint_dir, final_ckpt_out, driver_edge_limit
+    )
+    if isinstance(sol, DriverComponents):
+        return sol.frame(pairs.sparkSession)
+    return sol
 
-    ``doubling_jumps`` > 1 compresses depth 2^j per round BUT the
-    jumps are unmaterialized self-joins, so each extra jump RE-EXECUTES
-    the whole round tree below it (~2x work per jump; measured 5.5x
-    slower at fixture scale for jumps=2, where dup graphs are shallow
-    cliques converging in ~3 rounds anyway). Raise it only for
-    genuinely deep graphs where halving rounds beats doubling
-    per-round cost — and consider checkpointing between jumps first.
+
+def solve_components(
+    pairs: DataFrame,
+    max_iter: int = 20,
+    checkpoint_dir: str | None = None,
+    final_ckpt_out: list[DataFrame] | None = None,
+    driver_edge_limit: int = 2_000_000,
+) -> DataFrame | DriverComponents:
+    """Connected components of the dup pairs: the driver's arrays
+    (:class:`DriverComponents`) when the edge list fits
+    ``driver_edge_limit``, else the distributed (id, component) frame.
+    Both answers label every node with its component's minimum id.
+
+    Over the cap, or whenever ``checkpoint_dir`` is set, labels
+    propagate in distributed rounds. Each round takes the min label
+    over the 1-hop neighborhood, then compresses paths by jumping
+    every label to its label's label (pointer doubling). Label depth
+    halves per round, so convergence is ~log2(diameter) rounds, not
+    diameter rounds — a 1M-hop chain converges within the default
+    ``max_iter``. A graph that still hasn't converged raises instead
+    of returning wrong groups.
 
     The convergence probe is a FILTER on the checkpointed frame (the
     pre-round label rides along as a ``__old`` column), not a
@@ -651,20 +696,12 @@ def connected_components(
     n_edges = edges.count() if checkpoint_dir is None else None
     if n_edges is not None and n_edges <= driver_edge_limit:
         import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import StructField, StructType
 
-        spark_ = pairs.sparkSession
         id_type = edges.schema["src"].dataType
-        out_schema = StructType(
-            [
-                StructField("id", id_type, False),
-                StructField("component", id_type, False),
-            ]
-        )
         if n_edges == 0:
             _release(edges)
-            return spark_.createDataFrame([], out_schema)
+            empty = np.array([], dtype=np.int64)
+            return DriverComponents(empty, empty, id_type)
         pdf = edges.toPandas()
         src = pdf["src"].to_numpy()
         dst = pdf["dst"].to_numpy()
@@ -675,8 +712,7 @@ def connected_components(
         dst_idx = np.searchsorted(nodes, dst)
         comp = _cc_local(nodes, src_idx, dst_idx)
         _release(edges)
-        out = pd.DataFrame({"id": nodes, "component": nodes[comp]})
-        return spark_.createDataFrame(out, schema=out_schema)
+        return DriverComponents(nodes, comp, id_type)
 
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "component", F.col("id")
@@ -699,32 +735,30 @@ def connected_components(
             )
         )
         # Pointer doubling: component labels are themselves node ids, so
-        # jumping to the label's own label halves every label chain;
-        # each extra jump halves it again. Explicit l/r aliases scope
-        # every column reference: a repeated self-join on the same
-        # lineage otherwise mis-resolves the join condition (both sides
-        # share attribute ids after the first jump) and silently joins
-        # wrong — caught by the union-find property test.
-        for _j in range(doubling_jumps):
-            lookup = new_labels.select(
-                F.col("id").alias("__cid"), F.col("component").alias("__cc")
+        # jumping to the label's own label halves every label chain.
+        # Explicit l/r aliases scope every column reference: the
+        # self-join shares attribute ids on both sides and otherwise
+        # mis-resolves the join condition and silently joins wrong —
+        # caught by the union-find property test.
+        lookup = new_labels.select(
+            F.col("id").alias("__cid"), F.col("component").alias("__cc")
+        )
+        new_labels = (
+            new_labels.alias("l")
+            .join(
+                lookup.alias("r"),
+                F.col("l.component") == F.col("r.__cid"),
+                "left",
             )
-            new_labels = (
-                new_labels.alias("l")
-                .join(
-                    lookup.alias("r"),
-                    F.col("l.component") == F.col("r.__cid"),
-                    "left",
-                )
-                .select(
-                    F.col("l.id").alias("id"),
-                    F.col("l.__old").alias("__old"),
-                    F.least(
-                        F.col("l.component"),
-                        F.coalesce(F.col("r.__cc"), F.col("l.component")),
-                    ).alias("component"),
-                )
+            .select(
+                F.col("l.id").alias("id"),
+                F.col("l.__old").alias("__old"),
+                F.least(
+                    F.col("l.component"),
+                    F.coalesce(F.col("r.__cc"), F.col("l.component")),
+                ).alias("component"),
             )
+        )
         # Checkpoint BEFORE the convergence probe: the probe executes
         # the label joins, and an eager checkpoint afterwards would
         # execute them a second time — probing the checkpointed frame
