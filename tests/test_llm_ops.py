@@ -370,6 +370,45 @@ def test_connected_components_driver_path_matches_distributed(spark):
     assert {c for _, c in local} == {0, 100, 200}
 
 
+@pytest.mark.parametrize("driver_edge_limit", [0, 2_000_000])
+def test_connected_components_dirty_input(spark, driver_edge_limit):
+    # Both paths (0 forces the distributed rounds, the default solves
+    # on the driver) must return the same rows and the same schema,
+    # nullability included, on dirty input: a pair with a null endpoint
+    # is no edge, self-loops and duplicate pairs collapse, string ids
+    # take the string minimum ("10" < "9"), and an empty frame is empty.
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    def expect(t):
+        return StructType(
+            [StructField("id", t, True), StructField("component", t, True)]
+        )
+
+    cases = [
+        (
+            [(1, 2), (2, 1), (1, 2), (3, 3), (None, 4), (5, None), (4, 6)],
+            "id_a bigint, id_b bigint",
+            {(1, 1), (2, 1), (3, 3), (4, 4), (6, 4)},
+            expect(LongType()),
+        ),
+        (
+            [("b", "a"), ("a", "c"), ("c", "a"), ("x", "x"), (None, "z"), ("10", "9")],
+            "id_a string, id_b string",
+            {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("10", "10"), ("9", "10")},
+            expect(StringType()),
+        ),
+        ([], "id_a bigint, id_b bigint", set(), expect(LongType())),
+    ]
+    for rows, schema, want_rows, want_schema in cases:
+        out = connected_components(
+            spark.createDataFrame(rows, schema), driver_edge_limit=driver_edge_limit
+        )
+        got = [tuple(r) for r in out.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == want_rows
+        assert out.schema == want_schema
+
+
 def test_simhash_narrow_bits_stay_in_range(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "zeta eta theta")], ["doc_id", "text"]

@@ -1361,6 +1361,68 @@ def test_compact_excise_registry_preserves_semantics(spark, tmp_path):
     assert ra == rb and ra[6] == "z w"
 
 
+def test_excise_ingest_completes_committed_swap_before_reading(spark, tmp_path):
+    # Registry twin of test_ingest_completes_committed_swap_before_reading:
+    # a compact_excise_registry that committed its staging but crashed
+    # mid-swap (folded partitions deleted, staging not yet renamed to
+    # batch=-1) leaves a registry missing counts. The next excise_ingest
+    # must complete the swap at lease acquisition, before its first
+    # registry read, and excise exactly as an uncrashed run does.
+    import shutil
+
+    def mk(name):
+        d = {k: str(tmp_path / f"{name}_{k}") for k in ("src", "out", "state", "ckpt")}
+        os.makedirs(d["src"])
+        return d
+
+    schema = "doc_id bigint, text string"
+
+    def land(d, rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(d["src"])
+        return st.excise_ingest(
+            spark.readStream.format("parquet").schema(schema).load(d["src"]),
+            d["out"], d["state"], d["ckpt"], k=3, min_docs=3,
+        )
+
+    a, b = mk("crash"), mk("ctl")
+    for d in (a, b):
+        for rows in ([(1, "a b c d e")], [(2, "a b c x y")], [(3, "q q q q q")]):
+            land(d, rows)
+
+    # Crash a compaction mid-swap by hand: committed staging holding
+    # the folded sums of batches 0-1, both folded partitions deleted,
+    # nothing renamed in yet. A plain read now sees only batch=2.
+    state = tmp_path / "crash_state"
+    staging = state / ".compact_staging"
+    spark.read.parquet(str(state / "batch=0"), str(state / "batch=1")).groupBy(
+        "__h"
+    ).agg(F.sum("__nd").alias("__nd")).write.parquet(str(staging))
+    (staging / "_UPTO").write_text("1")
+    (staging / "_COMMITTED_COMPACTION").touch()
+    shutil.rmtree(str(state / "batch=0"))
+    shutil.rmtree(str(state / "batch=1"))
+
+    # Doc 4 is the THIRD distinct doc carrying "a b c": it is excised
+    # only if the registry read sees batches 0-1 through batch=-1.
+    last = [(4, "n a b c m"), (5, "fresh stuff entirely")]
+    for d in (a, b):
+        land(d, last)
+    assert not staging.exists()
+    parts = sorted(p.name for p in state.iterdir() if p.is_dir())
+    assert parts == ["batch=-1", "batch=2", "batch=3"]
+    got = [
+        {
+            (r.doc_id, r.n_tokens, r.n_removed, r.clean_text)
+            for r in spark.read.parquet(d["out"]).collect()
+        }
+        for d in (a, b)
+    ]
+    assert got[0] == got[1]
+    assert (4, 5, 3, "n m") in got[0]
+
+
 def test_compaction_crash_recovery_is_idempotent(spark, tmp_path):
     # Crash AFTER the commit marker, DURING the swap: recovery must
     # complete it exactly once; crash BEFORE the marker: staging is

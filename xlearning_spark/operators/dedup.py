@@ -20,7 +20,7 @@ from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from xlearning_spark.functions import tokens, with_shingle_hashes
@@ -534,21 +534,22 @@ class DriverComponents(NamedTuple):
     """Components solved on the driver (:func:`solve_components`):
     ``nodes`` holds the distinct ids in ascending order and
     ``comp[i]`` the index in ``nodes`` of node i's component, which is
-    its minimum member (so ``nodes[comp]`` are the component ids)."""
+    its minimum member (so ``nodes[comp]`` are the component ids).
+    ``id_field`` is the edge list's ``src`` field: its type and
+    nullability are those of the distributed path's columns."""
 
     nodes: Any  # numpy array of ids
     comp: Any  # numpy array of indices into nodes
-    id_type: DataType
+    id_field: StructField
 
     def frame(self, spark: SparkSession) -> DataFrame:
-        """The (id, component) frame :func:`connected_components` returns."""
+        """The (id, component) frame :func:`connected_components` returns,
+        with the distributed path's schema."""
         import pandas as pd
 
+        t, nullable = self.id_field.dataType, self.id_field.nullable
         schema = StructType(
-            [
-                StructField("id", self.id_type, False),
-                StructField("component", self.id_type, False),
-            ]
+            [StructField("id", t, nullable), StructField("component", t, nullable)]
         )
         if len(self.nodes) == 0:
             return spark.createDataFrame([], schema)
@@ -653,6 +654,11 @@ def solve_components(
             ).alias("__e")
         )
         .select("__e.src", "__e.dst")
+        # A pair with a null endpoint is no edge: both of its rows go,
+        # so the driver solve never sees a null id and both paths agree.
+        # Filtered on the generated columns, so the predicate stays
+        # here and the upstream pair plan is unchanged.
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         # r13 (guide §2.4): hash-partition the static edge list by the
         # per-round join key BEFORE checkpointing — checkpoint preserves
         # outputPartitioning, so every round's edges⋈labels join reads
@@ -697,11 +703,11 @@ def solve_components(
     if n_edges is not None and n_edges <= driver_edge_limit:
         import numpy as np
 
-        id_type = edges.schema["src"].dataType
+        id_field = edges.schema["src"]
         if n_edges == 0:
             _release(edges)
             empty = np.array([], dtype=np.int64)
-            return DriverComponents(empty, empty, id_type)
+            return DriverComponents(empty, empty, id_field)
         pdf = edges.toPandas()
         src = pdf["src"].to_numpy()
         dst = pdf["dst"].to_numpy()
@@ -712,7 +718,7 @@ def solve_components(
         dst_idx = np.searchsorted(nodes, dst)
         comp = _cc_local(nodes, src_idx, dst_idx)
         _release(edges)
-        return DriverComponents(nodes, comp, id_type)
+        return DriverComponents(nodes, comp, id_field)
 
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "component", F.col("id")

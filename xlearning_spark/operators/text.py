@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from xlearning_spark.functions import (
     fingerprint,
@@ -388,7 +387,6 @@ def fingerprint_overlap_pairs(
     max_df: int | None = None,
     *,
     exploded: bool = False,
-    materialize: bool = False,
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints:
     ``(id_a, id_b, n_shared)`` — the plagiarism/near-dup report of the
@@ -415,17 +413,13 @@ def fingerprint_overlap_pairs(
     Deduplicate that the optimizer removes (verified in
     plans/r14/q79_*: same Exchange count with and without it).
 
-    ``materialize=True`` persists the exploded (id, fingerprint) frame:
-    it feeds the df-cap filter plus both self-join sides, and without a
-    materialization point Catalyst re-executes the entire upstream
-    fingerprint computation (explode + double window pass for the
-    winnowing case) once per branch — three times in q79's before-plan.
-    Left to the LRU cache manager to evict (ngram_jaccard_pairs
-    discipline). Default False (r14, ADVICE r13): persisting is the
-    CALLER's decision because only the caller knows whether the
-    fingerprint frame is fixture-sized or corpus-scale — q79 opts in
-    on its small input; at 100 TB the lazy plan avoids pinning a
-    corpus-scale frame in executor storage.
+    The plan is lazy: the exploded (id, fingerprint) frame feeds the
+    df-cap filter and both self-join sides, so Catalyst runs the
+    upstream fingerprint computation once per branch. A caller whose
+    fingerprint frame is small enough to cache persists ``fps`` itself;
+    at 100 TB the lazy plan avoids pinning a corpus-scale frame in
+    executor storage. No caller persists today: q79 measured faster
+    lazy under the cold-cache protocol (r14).
     """
     if exploded:
         fp = fps.select(
@@ -435,8 +429,6 @@ def fingerprint_overlap_pairs(
         fp = fps.select(
             F.col(id_col).alias("__id"), F.explode(fp_col).alias("__fp")
         )
-    if materialize:
-        fp = fp.persist(StorageLevel.MEMORY_AND_DISK)
     if max_df is not None:
         rare = (
             fp.groupBy("__fp")

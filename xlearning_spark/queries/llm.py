@@ -1386,20 +1386,17 @@ def q79_winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.3/§2.4): feed the pair join the ROWS form — the
     # aggregated winnowing_fingerprints array exists only to be
     # re-exploded by fingerprint_overlap_pairs, paying a collect_set
-    # Exchange for nothing; and with materialize=True the fingerprint
-    # computation (char explode + double window pass) runs once instead
-    # of once per join branch (3x in the before-plan). Same rows out:
-    # winnowing_fingerprint_rows is distinct per (doc_id, fp).
+    # Exchange for nothing. Same rows out: winnowing_fingerprint_rows
+    # is distinct per (doc_id, fp).
     fps = winnowing_fingerprint_rows(
         docs, "doc_id", "text", k=8, w=4, polynomial=True
     )
     return fingerprint_overlap_pairs(
-        # materialize=False (r14, measured under the cold-cache
+        # Lazy, not persisted (r14, measured under the cold-cache
         # protocol, interleaved in one session: persist 4.15 s vs lazy
         # 4.02 s median): caching the exploded fingerprint frame no
         # longer wins once every run pays the cache write — the r13
-        # gain came from warm-cache re-runs. Lazy also matches the
-        # operator's scale-safe default.
+        # gain came from warm-cache re-runs.
         fps, fp_col="fp", min_shared=2, max_df=20, exploded=True,
     )
 

@@ -24,7 +24,11 @@ streaming results equal the batch oracle-checked ones.
 
 from __future__ import annotations
 
+import contextlib
 import math
+import os
+import re
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -319,12 +323,25 @@ def session_windows(
     )
 
 
-def incremental_save(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    out_mode: str = "append",
-):
+def _drain(
+    stream_df: DataFrame, fn, checkpoint_dir: str, query_name: str | None = None
+) -> None:
+    """T5/T6: run ``fn(batch_df, batch_id)`` over every micro-batch
+    currently available (foreachBatch, append mode, availableNow) and
+    wait for the drain to finish. ``query_name`` names the query so
+    other code can find it in ``spark.streams.active``."""
+    w = (
+        stream_df.writeStream.foreachBatch(fn)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    if query_name is not None:
+        w = w.queryName(query_name)
+    w.start().awaitTermination()
+
+
+def incremental_save(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
     """T5: the save-model path — drain currently-available data into a
     versioned subdirectory per micro-batch via foreachBatch, mirroring
     the reference's ``interResult_<timestamp>/<container>`` incremental
@@ -339,14 +356,7 @@ def incremental_save(
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_{batch_id:08d}")
         written.append(batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(save_batch)
-        .outputMode(out_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, save_batch, checkpoint_dir)
     return written
 
 
@@ -459,14 +469,7 @@ def incremental_partition_save(
         touched.update(parts)
         written.append(batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(save_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, save_batch, checkpoint_dir)
     return written
 
 
@@ -595,9 +598,7 @@ def neardup_ingest(
         solve_components,
     )
 
-    written: list[int] = []
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def land(batch_df: DataFrame, batch_id: int) -> bool:
         spark = batch_df.sparkSession
         # One eager checkpoint of the deduped batch: AQE sizes it by its
         # real bytes (one partition for a small batch, many for a
@@ -623,7 +624,7 @@ def neardup_ingest(
                 .collect()
             ]
             if not ids:
-                return
+                return False
             small = len(ids) <= broadcast_batch_limit
             pool = _neardup_pool(spark, corpus_dir, batch, batch_id, id_col, text_col)
             # Incremental pair generation: every candidate pair must
@@ -647,7 +648,7 @@ def neardup_ingest(
             if small and isinstance(sol, DriverComponents):
                 losers = _driver_losers(sol, ids)
                 if len(losers) == len(ids):
-                    return
+                    return False
                 # The write reads only the batch checkpoint, never
                 # corpus_dir, so it needs no materialization of its own.
                 survivors = batch
@@ -671,27 +672,18 @@ def neardup_ingest(
                 survivors = survivors.localCheckpoint(eager=True)
                 batch_ckpts.append(survivors)
                 if survivors.isEmpty():
-                    return
+                    return False
             idempotent_batch_append(survivors, corpus_dir, batch_id)
-            written.append(batch_id)
+            return True
         finally:
             for frame in batch_persists:
                 frame.unpersist()
             for ck in batch_ckpts:
                 release_checkpoint(ck)
 
-    with _batch_ingest_lease(
-        stream_df.sparkSession, corpus_dir, "neardup_ingest"
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return written
+    return _landing_ingest(
+        stream_df, corpus_dir, checkpoint_dir, "neardup_ingest", land
+    )
 
 
 def _neardup_pool(
@@ -812,52 +804,87 @@ def idempotent_batch_append(df: DataFrame, out_dir: str, batch_id: int) -> int:
     return n
 
 
-def _batch_ingest_lease(spark, out_dir: str, query: str):
-    """Best-effort cross-process lease the batch-landing ingests hold
-    in their output dir for the duration of a drain (the
-    :func:`excise_ingest` discipline, ADVICE r7): an offline
-    :func:`compact_batch_output` in ANOTHER process/session refuses
-    while the lease file exists. Held via context manager; released on
-    exit. A crash leaves it behind — the next drain of the same ingest
-    rewrites and then clears it (self-healing), or the operator passes
-    ``ignore_lease=True`` to compaction after confirming nothing is
-    live. Underscore-prefixed: invisible to parquet readers."""
-    import contextlib
-    import json as _json
-    import os
+@contextlib.contextmanager
+def _ingest_lease(spark, lease_dir: str, query: str, finish_swap):
+    """Best-effort cross-process lease every state-landing ingest holds
+    in ``lease_dir`` for the duration of a drain (ADVICE r7): the
+    batch-landing ingests in their output dir, :func:`excise_ingest`
+    in its registry. An offline :func:`compact_batch_output` /
+    :func:`compact_excise_registry` in ANOTHER process/session refuses
+    while the lease file exists. Released on exit. A crash leaves it
+    behind — the next drain of the same ingest rewrites and then clears
+    it (self-healing), or the operator passes ``ignore_lease=True`` to
+    compaction after confirming nothing is live. Underscore-prefixed:
+    invisible to parquet readers.
+
+    Close the lease loop in BOTH directions (ADVICE r12): compaction
+    refuses while an ingest lease exists, and an ingest starting while
+    a crashed compaction left a COMMITTED staging mid-swap (folded
+    files deleted, base not yet moved in) would read state missing
+    rows. So ``finish_swap(spark, lease_dir)`` — the compactor's
+    recovery half, :func:`_finish_batch_compaction` or
+    :func:`_finish_compaction` — runs first. Completing the swap is
+    idempotent and safe even if the compactor is still alive at this
+    exact point: both sides converge on the same final state."""
+    import json
     import socket
 
-    @contextlib.contextmanager
-    def _held():
-        # Close the lease loop in BOTH directions (ADVICE r12):
-        # compaction refuses while an ingest lease exists, and an
-        # ingest starting while a crashed compaction left a COMMITTED
-        # staging mid-swap (folded files deleted, base files not yet
-        # renamed in) would read a corpus missing rows. Completing the
-        # swap here is idempotent and safe even if the compactor is
-        # still alive at this exact point: destination names are pure
-        # functions of the staged sources and existing destinations
-        # are skipped, so both sides converge on the same final state.
-        _finish_batch_compaction(spark, out_dir)
-        path = os.path.join(out_dir, _INGEST_LEASE)
-        _write_small_file(
-            spark,
-            path,
-            _json.dumps(
-                {
-                    "query": query,
-                    "host": socket.gethostname(),
-                    "pid": os.getpid(),
-                }
-            ),
-        )
-        try:
-            yield
-        finally:
-            fs, jvm = _fs_for(spark, out_dir)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(path), False)
+    finish_swap(spark, lease_dir)
+    path = os.path.join(lease_dir, _INGEST_LEASE)
+    _write_small_file(
+        spark,
+        path,
+        json.dumps(
+            {"query": query, "host": socket.gethostname(), "pid": os.getpid()}
+        ),
+    )
+    try:
+        yield
+    finally:
+        fs, jvm = _fs_for(spark, lease_dir)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(path), False)
 
-    return _held()
+
+def _landing_ingest(
+    stream_df: DataFrame, out_dir: str, checkpoint_dir: str, query: str, land
+) -> list[int]:
+    """Skeleton of the ingests that land each micro-batch in ``out_dir``
+    with :func:`idempotent_batch_append`: hold the ingest lease on
+    ``out_dir`` (named ``query``), drain the stream through
+    ``land(batch_df, batch_id)``, and return the batch ids for which
+    ``land`` reported that rows landed."""
+    written: list[int] = []
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        if land(batch_df, batch_id):
+            written.append(batch_id)
+
+    with _ingest_lease(
+        stream_df.sparkSession, out_dir, query, _finish_batch_compaction
+    ):
+        _drain(stream_df, step, checkpoint_dir)
+    return written
+
+
+def _append_frame(batch_frame, out_dir: str):
+    """``land`` for :func:`_landing_ingest` when a batch's output is one
+    frame, ``batch_frame(batch_df)``: checkpoint it eagerly (one
+    execution feeds both the emptiness probe and the write), skip an
+    empty batch, append the rest idempotently by batch id, and release
+    the per-batch blocks eagerly (cleaner-lag discipline — a long
+    stream must not accumulate one dead block set per batch)."""
+
+    def land(batch_df: DataFrame, batch_id: int) -> bool:
+        out = batch_frame(batch_df).localCheckpoint(eager=True)
+        try:
+            if out.isEmpty():
+                return False
+            idempotent_batch_append(out, out_dir, batch_id)
+            return True
+        finally:
+            release_checkpoint(out)
+
+    return land
 
 
 def scored_ingest(
@@ -903,9 +930,8 @@ def scored_ingest(
     from xlearning_spark.operators.text import hashed_bow, score_text_lr
 
     dim = len(weights)
-    written: list[int] = []
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def score_batch(batch_df: DataFrame) -> DataFrame:
         batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
         feats = hashed_bow(batch, id_col, text_col, dim, portable)
         scored = score_text_lr(feats, weights, bias, id_col)
@@ -921,29 +947,12 @@ def scored_ingest(
         )
         if keep_threshold is not None:
             full = full.filter(F.col("score") >= keep_threshold)
-        full = full.localCheckpoint(eager=True)
-        try:
-            if full.isEmpty():
-                return
-            idempotent_batch_append(full, out_dir, batch_id)
-            written.append(batch_id)
-        finally:
-            # Per-micro-batch blocks released eagerly (cleaner-lag
-            # discipline — see incremental_save).
-            release_checkpoint(full)
+        return full
 
-    with _batch_ingest_lease(
-        stream_df.sparkSession, out_dir, "scored_ingest"
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return written
+    return _landing_ingest(
+        stream_df, out_dir, checkpoint_dir, "scored_ingest",
+        _append_frame(score_batch, out_dir),
+    )
 
 
 def ann_ingest(
@@ -987,9 +996,9 @@ def ann_ingest(
     """
     from xlearning_spark.operators.similarity import assign_cells
 
-    written: list[int] = []
+    cells = index_dir + "/cells"
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def assign_batch(batch_df: DataFrame) -> DataFrame:
         spark = batch_df.sparkSession
         cent = (
             spark.read.parquet(index_dir + "/centroids")
@@ -1003,28 +1012,12 @@ def ann_ingest(
             )
         centroids = [list(r["centroid"]) for r in cent]
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
-        assigned = assign_cells(batch, centroids, id_col, vec_col)
-        assigned = assigned.localCheckpoint(eager=True)
-        try:
-            if assigned.isEmpty():
-                return
-            idempotent_batch_append(assigned, index_dir + "/cells", batch_id)
-            written.append(batch_id)
-        finally:
-            release_checkpoint(assigned)
+        return assign_cells(batch, centroids, id_col, vec_col)
 
-    with _batch_ingest_lease(
-        stream_df.sparkSession, index_dir + "/cells", "ann_ingest"
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return written
+    return _landing_ingest(
+        stream_df, cells, checkpoint_dir, "ann_ingest",
+        _append_frame(assign_batch, cells),
+    )
 
 
 def tokenized_ingest(
@@ -1071,9 +1064,7 @@ def tokenized_ingest(
         load_bpe_merge_table,
     )
 
-    written: list[int] = []
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def tokenize_batch(batch_df: DataFrame) -> DataFrame:
         table = load_bpe_merge_table(batch_df.sparkSession, model_dir)
         merges = [(l, r) for l, r, _ in table]
         batch = (
@@ -1081,46 +1072,79 @@ def tokenized_ingest(
             .filter(F.col(text_col).isNotNull())
             .dropDuplicates([id_col])
         )
-        toks = apply_bpe(batch, text_col=text_col, merges=merges).select(
+        return apply_bpe(batch, text_col=text_col, merges=merges).select(
             id_col,
             F.col("bpe_tokens"),
             F.size("bpe_tokens").cast("long").alias("n_bpe_tokens"),
         )
-        toks = toks.localCheckpoint(eager=True)
-        try:
-            if toks.isEmpty():
-                return
-            idempotent_batch_append(toks, out_dir, batch_id)
-            written.append(batch_id)
-        finally:
-            release_checkpoint(toks)
 
-    with _batch_ingest_lease(
-        stream_df.sparkSession, out_dir, "tokenized_ingest"
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return written
+    return _landing_ingest(
+        stream_df, out_dir, checkpoint_dir, "tokenized_ingest",
+        _append_frame(tokenize_batch, out_dir),
+    )
+
+
+def _sketch_versions(spark, state_dir: str) -> list:
+    """``(version number, FileStatus)`` of every ``v<N>`` version
+    directory of the CMS/HLL sketch state under ``state_dir``, in
+    numeric version order (Hadoop FS API, so any scheme works); empty
+    before the first commit. Names that are not ``v`` + an integer are
+    not versions and are skipped."""
+    fs, jvm = _fs_for(spark, state_dir)
+    vers = []
+    glob = jvm.org.apache.hadoop.fs.Path(state_dir + "/v*")
+    for st in fs.globStatus(glob) or []:
+        if not st.isDirectory():
+            continue
+        try:
+            vers.append((int(st.getPath().getName()[1:]), st))
+        except ValueError:
+            continue
+    return sorted(vers, key=lambda v: v[0])
 
 
 def _latest_hll_state(spark, state_dir: str) -> str | None:
-    """Newest ``v*`` version directory under ``state_dir`` (Hadoop FS
-    API, so any scheme works), or None before the first commit."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(state_dir + "/v*")
-    fs = path.getFileSystem(conf)
-    statuses = fs.globStatus(path)
-    if not statuses:
-        return None
-    dirs = sorted(st.getPath().toString() for st in statuses if st.isDirectory())
-    return dirs[-1] if dirs else None
+    """Newest version directory under ``state_dir``, or None before the
+    first commit."""
+    vers = _sketch_versions(spark, state_dir)
+    return vers[-1][1].getPath().toString() if vers else None
+
+
+def _latest_state_below(spark, state_dir: str, batch_id: int) -> str | None:
+    """Newest version directory with version NUMBER strictly below
+    ``batch_id`` — the exactly-once read point for ADDITIVE sketch
+    state (see :func:`streaming_cms_counts`): a replayed batch must
+    rebuild its own version from its predecessor, never merge itself
+    into a state that already includes it."""
+    below = [st for v, st in _sketch_versions(spark, state_dir) if v < batch_id]
+    return below[-1].getPath().toString() if below else None
+
+
+def _sketch_update(state_dir: str, checkpoint_dir: str | None, sketch, merge, prev):
+    """The per-micro-batch commit of the versioned sketch state: sketch
+    the batch (``sketch(batch_df)``), merge it with the predecessor
+    version ``prev(spark, batch_id)`` names (``merge(prev_df, regs)``),
+    and write the result as the batch's own version directory
+    ``state_dir/v{batch_id}``, stamped with its run lineage when
+    ``checkpoint_dir`` is given (else the pruner falls back to its
+    mtime guard for the unmarked version)."""
+
+    def update(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        regs = sketch(batch_df)
+        before = prev(spark, batch_id)
+        if before is not None:
+            regs = merge(spark.read.parquet(before), regs)
+        # Materialize before writing: the merged plan reads the previous
+        # version; eager checkpoint severs that scan from the write.
+        vdir = f"{state_dir}/v{batch_id:010d}"
+        ck = regs.localCheckpoint(eager=True)
+        ck.write.mode("overwrite").parquet(vdir)
+        release_checkpoint(ck)  # per-batch blocks, dead after the write
+        if checkpoint_dir is not None:
+            _mark_sketch_version(spark, vdir, checkpoint_dir)
+
+    return update
 
 
 def streaming_hll_distinct(
@@ -1167,31 +1191,16 @@ def streaming_hll_distinct(
     from xlearning_spark.operators.sketch import hll_registers, merge_hll_registers
 
     group_cols = group_cols or []
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        regs = hll_registers(batch_df, col, p, group_cols)
-        prev = _latest_hll_state(spark, state_dir)
-        if prev is not None:
-            regs = merge_hll_registers(
-                spark.read.parquet(prev), regs, group_cols
-            )
-        # Materialize before writing: the merged plan reads the previous
-        # version; eager checkpoint severs that scan from the write.
-        vdir = f"{state_dir}/v{batch_id:010d}"
-        ck = regs.localCheckpoint(eager=True)
-        ck.write.mode("overwrite").parquet(vdir)
-        release_checkpoint(ck)  # per-batch blocks, dead after the write
-        _mark_sketch_version(spark, vdir, checkpoint_dir)
-
-    q = (
-        stream_df.writeStream.foreachBatch(update)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    update = _sketch_update(
+        state_dir,
+        checkpoint_dir,
+        lambda batch_df: hll_registers(batch_df, col, p, group_cols),
+        lambda prev, regs: merge_hll_registers(prev, regs, group_cols),
+        # The newest version, even one at or above this batch: MAX-merge
+        # is idempotent (see the checkpoint-reset note above).
+        lambda spark, batch_id: _latest_hll_state(spark, state_dir),
     )
-    q.awaitTermination()
+    _drain(stream_df, update, checkpoint_dir)
 
 
 def hll_state_estimate(
@@ -1237,33 +1246,6 @@ def run_available_now(stream_df: DataFrame, checkpoint_dir: str, out_mode: str =
     return stream_df.sparkSession.table(name)
 
 
-def _latest_state_below(spark, state_dir: str, batch_id: int) -> str | None:
-    """Newest ``v*`` version directory with version NUMBER strictly
-    below ``batch_id`` — the exactly-once read point for ADDITIVE
-    sketch state (see :func:`streaming_cms_counts`): a replayed batch
-    must rebuild its own version from its predecessor, never merge
-    itself into a state that already includes it."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(state_dir + "/v*")
-    fs = path.getFileSystem(conf)
-    statuses = fs.globStatus(path)
-    if not statuses:
-        return None
-    dirs = []
-    for stt in statuses:
-        if not stt.isDirectory():
-            continue
-        p = stt.getPath().toString()
-        try:
-            v = int(p.rsplit("/v", 1)[1])
-        except ValueError:
-            continue
-        if v < batch_id:
-            dirs.append((v, p))
-    return max(dirs)[1] if dirs else None
-
-
 def _cms_update(
     col: str,
     state_dir: str,
@@ -1278,22 +1260,13 @@ def _cms_update(
     its mtime guard for unmarked versions)."""
     from xlearning_spark.operators.sketch import cms_registers, merge_cms_registers
 
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        regs = cms_registers(batch_df, col, depth, width, group_cols)
-        prev = _latest_state_below(spark, state_dir, batch_id)
-        if prev is not None:
-            regs = merge_cms_registers(
-                spark.read.parquet(prev), regs, group_cols
-            )
-        vdir = f"{state_dir}/v{batch_id:010d}"
-        ck = regs.localCheckpoint(eager=True)
-        ck.write.mode("overwrite").parquet(vdir)
-        release_checkpoint(ck)  # per-batch blocks, dead after the write
-        if checkpoint_dir is not None:
-            _mark_sketch_version(spark, vdir, checkpoint_dir)
-
-    return update
+    return _sketch_update(
+        state_dir,
+        checkpoint_dir,
+        lambda batch_df: cms_registers(batch_df, col, depth, width, group_cols),
+        lambda prev, regs: merge_cms_registers(prev, regs, group_cols),
+        lambda spark, batch_id: _latest_state_below(spark, state_dir, batch_id),
+    )
 
 
 def streaming_cms_counts(
@@ -1325,16 +1298,11 @@ def streaming_cms_counts(
     lifetime, as with the HLL form. Read estimates with
     :func:`cms_state_estimate`.
     """
-    q = (
-        stream_df.writeStream.foreachBatch(
-            _cms_update(col, state_dir, depth, width, group_cols, checkpoint_dir)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df,
+        _cms_update(col, state_dir, depth, width, group_cols, checkpoint_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def cms_state_estimate(
@@ -1412,8 +1380,6 @@ def excise_ingest(
 
     Returns the batch ids that landed at least one document.
     """
-    import os
-
     from pyspark.storagelevel import StorageLevel
 
     from xlearning_spark.operators.dedup import (
@@ -1422,10 +1388,6 @@ def excise_ingest(
     )
 
     processed: list[int] = []
-
-    # Complete any compaction swap a crash interrupted (idempotent,
-    # no-op in the common case) before the first registry read.
-    _finish_compaction(stream_df.sparkSession, state_dir)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1486,43 +1448,14 @@ def excise_ingest(
         rows.unpersist()
         processed.append(batch_id)
 
-    # Best-effort cross-process lease (ADVICE r7): the same-session
-    # guard in compact_excise_registry cannot see an ingest running in
-    # another process; this file lets it at least DETECT one. Held for
-    # the drain, released on exit (crash leaves it behind — then
-    # compaction refuses until the ingest is re-run or the operator
-    # passes ignore_lease=True after confirming nothing is live).
-    import json
-    import socket
-
-    lease_path = os.path.join(state_dir, _INGEST_LEASE)
-    _write_small_file(
-        stream_df.sparkSession,
-        lease_path,
-        json.dumps(
-            {
-                "query": _excise_query_name(state_dir),
-                "host": socket.gethostname(),
-                "pid": os.getpid(),
-            }
-        ),
-    )
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(step)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            # Named after the state dir so offline maintenance
-            # (compact_excise_registry) can detect — and refuse to run
-            # concurrently with — a live ingest on the same registry.
-            .queryName(_excise_query_name(state_dir))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        fs, jvm = _fs_for(stream_df.sparkSession, state_dir)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(lease_path), False)
+    # The lease completes any compaction swap a crash interrupted
+    # (idempotent, no-op in the common case) before the first registry
+    # read. The same-session guard in compact_excise_registry is the
+    # query name; the lease lets another process at least DETECT the
+    # live ingest.
+    query = _excise_query_name(state_dir)
+    with _ingest_lease(stream_df.sparkSession, state_dir, query, _finish_compaction):
+        _drain(stream_df, step, checkpoint_dir, query)
     return processed
 
 
@@ -1550,11 +1483,17 @@ def _excise_query_name(state_dir: str) -> str:
     return f"excise_ingest:{state_dir.rstrip('/')}"
 
 
-#: Lease file a live :func:`excise_ingest` holds in its ``state_dir``
-#: so offline maintenance in ANOTHER process/session can at least
-#: detect the concurrency (ADVICE r7) — the same-session check above
-#: cannot see it.
+#: Lease file every live landing ingest holds (:func:`_ingest_lease`):
+#: :func:`excise_ingest` in its ``state_dir``, the batch-landing ingests
+#: in their output dir. Offline compaction in ANOTHER process/session
+#: can at least detect the concurrency (ADVICE r7) — the same-session
+#: query-name check cannot see it.
 _INGEST_LEASE = "_INGEST_LEASE"
+
+#: Staging dir and commit marker of the compactors' staged swap
+#: (:func:`_committed_staging`). Dot-prefixed: invisible to readers.
+_COMPACT_STAGING = ".compact_staging"
+_COMPACT_MARKER = "_COMMITTED_COMPACTION"
 
 #: Per-version run marker for the CMS/HLL sketch state (ADVICE r7):
 #: carries the streaming query id persisted in the checkpoint metadata,
@@ -1589,8 +1528,6 @@ def _mark_sketch_version(spark, version_dir: str, checkpoint_dir: str) -> None:
     """Stamp a committed sketch version with its run lineage (see
     :data:`_SKETCH_RUN`); silently skipped when the checkpoint metadata
     is not readable — the pruner's mtime guard covers unmarked dirs."""
-    import os
-
     run = _checkpoint_lineage_id(spark, checkpoint_dir)
     if run:
         _write_small_file(
@@ -1604,7 +1541,6 @@ def _checkpoint_lineage_id(spark, checkpoint_dir: str) -> str | None:
     :data:`_SKETCH_RUN` markers. None if unreadable (e.g. tests driving
     the update function directly, with no checkpoint)."""
     import json
-    import os
 
     try:
         raw = _read_small_file(spark, os.path.join(checkpoint_dir, "metadata"))
@@ -1613,45 +1549,92 @@ def _checkpoint_lineage_id(spark, checkpoint_dir: str) -> str | None:
         return None
 
 
-def _finish_compaction(spark, state_dir: str) -> bool:
-    """Idempotent recovery half of :func:`compact_excise_registry`'s
-    swap: if a committed staging dir exists (crash AFTER the marker,
-    DURING the swap), complete the swap — delete every folded
-    partition and rename staging into place. Returns True if a swap
-    was completed."""
-    import os
+def _refuse_or_clear_lease(spark, out_dir: str, caller: str, ignore_lease: bool) -> None:
+    """The compactors' cross-process guard: refuse while ``out_dir``
+    holds an :data:`_INGEST_LEASE` unless the operator passed
+    ``ignore_lease``, and then clear it — so ONE confirmed override
+    restores normal operation instead of every later compaction
+    needing ``ignore_lease`` forever (ADVICE r8)."""
+    path = os.path.join(out_dir, _INGEST_LEASE)
+    lease = _read_small_file(spark, path)
+    if lease is None:
+        return
+    if not ignore_lease:
+        raise RuntimeError(
+            f"{caller}({out_dir!r}) refused: it holds an ingest lease "
+            f"({lease}) — an ingest in another process/session may be live, "
+            "and compaction is offline-only. If that ingest crashed (stale "
+            "lease), re-run it or pass ignore_lease=True."
+        )
+    fs, jvm = _fs_for(spark, out_dir)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(path), False)
 
-    fs, jvm = _fs_for(spark, state_dir)
-    staging = os.path.join(state_dir, ".compact_staging")
-    marker = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(staging, "_COMMITTED_COMPACTION")
-    )
-    if not fs.exists(marker):
-        # No committed staging: drop any UNcommitted leftover (crash
-        # before the marker — the old partitions are intact and
-        # authoritative).
-        sp = jvm.org.apache.hadoop.fs.Path(staging)
-        if fs.exists(sp):
-            fs.delete(sp, True)
-        return False
-    upto_p = jvm.org.apache.hadoop.fs.Path(os.path.join(staging, "_UPTO"))
-    stream = fs.open(upto_p)
-    try:
-        upto = int(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
-    # Glob the partitions that actually exist (never iterate the id
-    # range — upto may be far above the real ids).
-    for st_ in fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(os.path.join(state_dir, "batch=*"))
-    ) or []:
-        name = st_.getPath().getName()
+
+class _Staging(NamedTuple):
+    """A committed compaction staging dir: the filesystem it lives on
+    (from :func:`_fs_for` at call time), the Hadoop ``Path`` class, the
+    staging path and the folded-through batch id from ``_UPTO``."""
+
+    fs: Any
+    hpath: Any
+    path: str
+    upto: int
+
+
+def _committed_staging(spark, out_dir: str) -> _Staging | None:
+    """Recovery half of the compactors' staged swap (the Hbox
+    ``_temporary`` → rename → ``_SUCCESS`` protocol,
+    ApplicationMaster.java:3106-3172), independent of layout: the
+    committed staging dir of ``out_dir``, or None when there is none.
+    An UNcommitted leftover (crash before the marker) is dropped here:
+    the unfolded state is intact and authoritative. The caller then
+    runs its own layout's delete-and-move step."""
+    fs, jvm = _fs_for(spark, out_dir)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    staging = os.path.join(out_dir, _COMPACT_STAGING)
+    if not fs.exists(hpath(os.path.join(staging, _COMPACT_MARKER))):
+        if fs.exists(hpath(staging)):
+            fs.delete(hpath(staging), True)
+        return None
+    upto = int(_read_small_file(spark, os.path.join(staging, "_UPTO")))
+    return _Staging(fs, hpath, staging, upto)
+
+
+def _commit_staging(spark, out_dir: str, folded: DataFrame, upto: int) -> None:
+    """Commit half of the staged swap: write ``folded`` to the staging
+    dir, then ``_UPTO``, then the commit marker. A crash before the
+    marker leaves the old state authoritative; after it the swap is
+    completed by the layout's finisher, which the caller runs next."""
+    staging = os.path.join(out_dir, _COMPACT_STAGING)
+    folded.write.mode("overwrite").parquet(staging)
+    _write_small_file(spark, os.path.join(staging, "_UPTO"), str(upto))
+    _write_small_file(spark, os.path.join(staging, _COMPACT_MARKER), "")
+
+
+def _registry_partitions(fs, hpath, state_dir: str) -> list:
+    """``(batch id, Path)`` of every ``batch=<id>`` partition that
+    exists under ``state_dir`` (globbed — never an id range)."""
+    parts = []
+    for st in fs.globStatus(hpath(os.path.join(state_dir, "batch=*"))) or []:
         try:
-            bid = int(name.split("=", 1)[1])
+            parts.append((int(st.getPath().getName().split("=", 1)[1]), st.getPath()))
         except ValueError:
             continue
-        if bid <= upto:
-            fs.delete(st_.getPath(), True)
+    return parts
+
+
+def _finish_compaction(spark, state_dir: str) -> bool:
+    """Idempotent recovery of :func:`compact_excise_registry`'s swap:
+    if a committed staging dir exists (crash AFTER the marker, DURING
+    the swap), complete the swap — delete every folded partition and
+    rename staging into place as ``batch=-1``. Returns True if a swap
+    was completed."""
+    stg = _committed_staging(spark, state_dir)
+    if stg is None:
+        return False
+    for bid, path in _registry_partitions(stg.fs, stg.hpath, state_dir):
+        if bid <= stg.upto:
+            stg.fs.delete(path, True)
     # Hadoop FileSystem.rename reports failure by returning FALSE, not
     # by raising — an unchecked failed swap here would leave the folded
     # partitions deleted and the merged base invisible inside
@@ -1659,14 +1642,11 @@ def _finish_compaction(spark, state_dir: str) -> bool:
     # recovery call happened to succeed (ADVICE r6). Raise loudly; the
     # committed staging dir survives, so retrying this function (or the
     # next excise_ingest start) completes the swap.
-    if not fs.rename(
-        jvm.org.apache.hadoop.fs.Path(staging),
-        jvm.org.apache.hadoop.fs.Path(os.path.join(state_dir, "batch=-1")),
-    ):
+    base = os.path.join(state_dir, "batch=-1")
+    if not stg.fs.rename(stg.hpath(stg.path), stg.hpath(base)):
         raise IOError(
-            f"compaction swap failed: rename({staging!r} -> "
-            f"{os.path.join(state_dir, 'batch=-1')!r}) returned false; "
-            "the committed staging dir is intact — re-run "
+            f"compaction swap failed: rename({stg.path!r} -> {base!r}) "
+            "returned false; the committed staging dir is intact — re-run "
             "compact_excise_registry (or restart the ingest stream) to "
             "complete the swap"
         )
@@ -1696,13 +1676,15 @@ def compact_excise_registry(
     its own delta — so it is never folded by default. Pass
     ``upto_batch=max`` only for a fully-drained stream.
 
-    Crash discipline (staged swap): merged sums land in a dot-prefixed
-    staging dir (invisible to partitioned reads), then ``_UPTO`` and a
-    commit marker, then the swap (delete folded partitions, rename
-    staging to ``batch=-1``). A crash before the marker leaves the old
-    partitions authoritative (staging discarded on recovery); a crash
-    after it is completed idempotently by :func:`_finish_compaction`,
-    which both this function and :func:`excise_ingest` run first.
+    Crash discipline: the staged swap both compactors share
+    (:func:`_commit_staging` / :func:`_committed_staging`). Merged sums
+    are committed to a dot-prefixed staging dir (invisible to
+    partitioned reads); this layout's swap deletes the folded
+    partitions and renames staging to ``batch=-1``. A crash before the
+    marker leaves the old partitions authoritative (staging discarded
+    on recovery); a crash after it is completed idempotently by
+    :func:`_finish_compaction`, which both this function and
+    :func:`excise_ingest` (at lease acquisition) run first.
 
     OFFLINE-ONLY: must not run while an :func:`excise_ingest` stream on
     this ``state_dir`` is live — a micro-batch that reads the registry
@@ -1721,10 +1703,6 @@ def compact_excise_registry(
     Returns the folded-through batch id, or None if there was nothing
     to compact.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     want = _excise_query_name(state_dir)
     for aq in spark.streams.active:
         if aq.name == want:
@@ -1734,36 +1712,11 @@ def compact_excise_registry(
                 "compaction is offline-only (stop or drain the ingest "
                 "first)"
             )
-    lease_path = os.path.join(state_dir, _INGEST_LEASE)
-    lease = _read_small_file(spark, lease_path)
-    if lease is not None:
-        if not ignore_lease:
-            raise RuntimeError(
-                f"compact_excise_registry({state_dir!r}) refused: the "
-                f"registry holds an ingest lease ({lease}) — an "
-                "excise_ingest in another process/session may be live, and "
-                "compaction is offline-only. If that ingest crashed (stale "
-                "lease), re-run it or pass ignore_lease=True."
-            )
-        # The caller has confirmed the lease is dead: clear it so ONE
-        # confirmed override restores normal operation — otherwise
-        # every later compaction on this registry would need
-        # ignore_lease forever (ADVICE r8).
-        fs_l, jvm_l = _fs_for(spark, state_dir)
-        fs_l.delete(jvm_l.org.apache.hadoop.fs.Path(lease_path), False)
+    _refuse_or_clear_lease(spark, state_dir, "compact_excise_registry", ignore_lease)
     _finish_compaction(spark, state_dir)
     fs, jvm = _fs_for(spark, state_dir)
-    glob = jvm.org.apache.hadoop.fs.Path(os.path.join(state_dir, "batch=*"))
-    statuses = fs.globStatus(glob)
-    if not statuses:
-        return None
-    ids = []
-    for st in statuses:
-        name = st.getPath().getName()
-        try:
-            ids.append(int(name.split("=", 1)[1]))
-        except ValueError:
-            continue
+    hpath = jvm.org.apache.hadoop.fs.Path
+    ids = [i for i, _ in _registry_partitions(fs, hpath, state_dir)]
     real = [i for i in ids if i >= 0]
     if not real:
         return None
@@ -1777,21 +1730,7 @@ def compact_excise_registry(
         .groupBy("__h")
         .agg(F.sum("__nd").alias("__nd"))
     )
-    staging = os.path.join(state_dir, ".compact_staging")
-    merged.write.mode("overwrite").parquet(staging)
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(os.path.join(staging, "_UPTO")), True
-    )
-    try:
-        out.write(str(upto).encode())
-    finally:
-        out.close()
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(
-            os.path.join(staging, "_COMMITTED_COMPACTION")
-        ),
-        True,
-    ).close()
+    _commit_staging(spark, state_dir, merged, upto)
     _finish_compaction(spark, state_dir)
     return upto
 
@@ -1801,29 +1740,16 @@ _BASE_FILE_RE = r"^base-(\d{10})-\d+\.parquet$"
 
 
 def _finish_batch_compaction(spark, out_dir: str) -> bool:
-    """Idempotent recovery half of :func:`compact_batch_output`'s swap
-    (the :func:`_finish_compaction` discipline on flat batch files): if
-    a committed staging dir exists, complete the swap — delete every
+    """Idempotent recovery of :func:`compact_batch_output`'s swap (the
+    :func:`_finish_compaction` discipline on flat batch files): if a
+    committed staging dir exists, complete the swap — delete every
     folded ``batch-<id<=upto>-*`` / ``base-<gen<upto>-*`` file, move
     the staged part files in as ``base-<upto>-<i>.parquet``, drop the
     staging dir. Returns True if a swap was completed."""
-    import os
-    import re
-
-    fs, jvm = _fs_for(spark, out_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    staging = os.path.join(out_dir, ".compact_staging")
-    if not fs.exists(hpath(os.path.join(staging, "_COMMITTED_COMPACTION"))):
-        # No committed staging: the batch files are intact and
-        # authoritative — drop any uncommitted leftover.
-        if fs.exists(hpath(staging)):
-            fs.delete(hpath(staging), True)
+    stg = _committed_staging(spark, out_dir)
+    if stg is None:
         return False
-    stream = fs.open(hpath(os.path.join(staging, "_UPTO")))
-    try:
-        upto = int(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    fs, hpath, upto = stg.fs, stg.hpath, stg.upto
     for st in fs.globStatus(hpath(os.path.join(out_dir, "*.parquet"))) or []:
         name = st.getPath().getName()
         mb = re.match(_BATCH_FILE_RE, name)
@@ -1831,7 +1757,7 @@ def _finish_batch_compaction(spark, out_dir: str) -> bool:
         if (mb and int(mb.group(1)) <= upto) or (mg and int(mg.group(1)) < upto):
             fs.delete(st.getPath(), False)
     staged = sorted(
-        (st.getPath() for st in fs.globStatus(hpath(staging + "/part-*")) or []),
+        (st.getPath() for st in fs.globStatus(hpath(stg.path + "/part-*")) or []),
         key=lambda p: p.getName(),
     )
     for src in staged:
@@ -1869,7 +1795,7 @@ def _finish_batch_compaction(spark, out_dir: str) -> bool:
                 "returned false; staging is intact — re-run "
                 "compact_batch_output to complete the swap"
             )
-    fs.delete(hpath(staging), True)
+    fs.delete(hpath(stg.path), True)
     return True
 
 
@@ -1899,43 +1825,29 @@ def compact_batch_output(
     the corpus read) — so the default ``upto_batch = max - 1`` never
     folds it. Pass ``upto_batch=max`` only for a fully-drained stream.
 
-    Crash discipline (staged swap, sized by bytes): folded rows land
-    in a dot-prefixed staging dir (invisible to parquet readers),
-    coalesced to ~``maxPartitionBytes``-sized files without a shuffle;
-    then ``_UPTO`` + a commit marker; then the swap (delete folded
-    files, move staged files in as the new generation). A crash before
-    the marker leaves the original files authoritative; after it,
-    :func:`_finish_batch_compaction` completes idempotently on the
-    next call. Generations are strictly increasing (a fold with
-    nothing new to add returns None), so recovery can distinguish old
-    from new base files by name alone — no manifest needed.
+    Crash discipline: the staged swap both compactors share
+    (:func:`_commit_staging` / :func:`_committed_staging`), sized by
+    bytes. Folded rows, coalesced to ~``maxPartitionBytes``-sized files
+    without a shuffle, are committed to a dot-prefixed staging dir
+    (invisible to parquet readers); this layout's swap deletes the
+    folded files and moves the staged files in as the new generation.
+    A crash before the marker leaves the original files authoritative;
+    after it, :func:`_finish_batch_compaction` completes idempotently
+    on the next call or at the next ingest's lease acquisition.
+    Generations are strictly increasing (a fold with nothing new to add
+    returns None), so recovery can distinguish old from new base files
+    by name alone — no manifest needed.
 
     OFFLINE-ONLY: stop or drain the ingest first. Every batch-landing
     ingest holds an ``_INGEST_LEASE`` in its output dir for the drain
-    (:func:`_batch_ingest_lease`), and compaction refuses while one
+    (:func:`_ingest_lease`), and compaction refuses while one
     exists — the cross-process guard of :func:`compact_excise_
     registry`. A crashed drain leaves a stale lease; re-run the ingest
     (it rewrites then clears the lease) or pass ``ignore_lease=True``
     after confirming nothing is live — one confirmed override clears
     it. Returns the new generation id, or None if there was nothing to
     fold."""
-    import math
-    import os
-    import re
-
-    lease_path = os.path.join(out_dir, _INGEST_LEASE)
-    lease = _read_small_file(spark, lease_path)
-    if lease is not None:
-        if not ignore_lease:
-            raise RuntimeError(
-                f"compact_batch_output({out_dir!r}) refused: the "
-                f"directory holds an ingest lease ({lease}) — an ingest "
-                "in another process/session may be live, and compaction "
-                "is offline-only. If that ingest crashed (stale lease), "
-                "re-run it or pass ignore_lease=True."
-            )
-        fs_l, jvm_l = _fs_for(spark, out_dir)
-        fs_l.delete(jvm_l.org.apache.hadoop.fs.Path(lease_path), False)
+    _refuse_or_clear_lease(spark, out_dir, "compact_batch_output", ignore_lease)
     _finish_batch_compaction(spark, out_dir)
     fs, jvm = _fs_for(spark, out_dir)
     hpath = jvm.org.apache.hadoop.fs.Path
@@ -1988,18 +1900,8 @@ def compact_batch_output(
         )
     )
     n_out = max(1, math.ceil(total / max_bytes))
-    staging = os.path.join(out_dir, ".compact_staging")
-    spark.read.parquet(*[uri for uri, _ in fold]).coalesce(n_out).write.mode(
-        "overwrite"
-    ).parquet(staging)
-    out = fs.create(hpath(os.path.join(staging, "_UPTO")), True)
-    try:
-        out.write(str(upto).encode())
-    finally:
-        out.close()
-    fs.create(
-        hpath(os.path.join(staging, "_COMMITTED_COMPACTION")), True
-    ).close()
+    folded = spark.read.parquet(*[uri for uri, _ in fold]).coalesce(n_out)
+    _commit_staging(spark, out_dir, folded, upto)
     _finish_batch_compaction(spark, out_dir)
     return upto
 
@@ -2013,7 +1915,7 @@ def prune_sketch_versions(spark, state_dir: str, keep: int = 2) -> list[str]:
     ``keep=2`` is the replay-safe floor for a stream that may still be
     running: the newest version can be a crash orphan whose batch was
     never checkpoint-committed, and its replay rebuilds FROM the
-    version strictly below it (``_latest_state_below``) — pruning that
+    version strictly below it (:func:`_latest_state_below`) — pruning that
     predecessor would strand the replay. ``keep=1`` is valid only for
     a fully-drained stream. Returns the deleted paths.
 
@@ -2041,29 +1943,14 @@ def prune_sketch_versions(spark, state_dir: str, keep: int = 2) -> list[str]:
     (they are point-in-time snapshots; the live run never reads them),
     then prune.
     """
-    import os
 
     if keep < 1:
         raise ValueError("keep must be >= 1")
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(state_dir + "/v*")
-    fs = path.getFileSystem(conf)
-    statuses = fs.globStatus(path)
-    if not statuses:
-        return []
     vers = []  # (version number, mtime, path string, run id | None)
-    for st in statuses:
-        if not st.isDirectory():
-            continue
+    for n, st in _sketch_versions(spark, state_dir):
         p = st.getPath().toString()
-        try:
-            n = int(p.rsplit("/v", 1)[1])
-        except ValueError:
-            continue
         run = _read_small_file(spark, os.path.join(p, _SKETCH_RUN))
         vers.append((n, st.getModificationTime(), p, run))
-    vers.sort()  # numeric version order, not lexical
     if not vers:
         return []
     run_ids = {run for _, _, _, run in vers if run is not None}
@@ -2093,6 +1980,7 @@ def prune_sketch_versions(spark, state_dir: str, keep: int = 2) -> list[str]:
             "Delete the dead run's v* directories manually, then prune."
         )
     doomed = [p for _, _, p, _ in vers[:-keep]] if keep < len(vers) else []
+    fs, jvm = _fs_for(spark, state_dir)
     for d in doomed:
         fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
     return doomed
