@@ -1124,25 +1124,163 @@ def test_ivf_index_round_trips_through_storage(spark, tmp_path, monkeypatch):
 
 
 def test_demote_hot_df_implies_materialization(spark):
-    # ADVICE r6: the demotion knob's document-frequency pass (count +
-    # explode/groupBy) must reuse ONE persisted shingle frame even when
-    # the caller opted out of materialization — otherwise tokenization
-    # and shingling re-execute two extra times before the main job.
+    # The shingle frame feeds the demotion's document-frequency pass
+    # (count + explode/groupBy) and the prefix/verify branches, so the
+    # generator always materializes it: inside a scope exactly one
+    # frame is persisted, and the scope frees it on exit.
+    from xlearning_spark.engine import intermediates
     from xlearning_spark.operators.dedup import ngram_jaccard_pairs
 
     d = spark.createDataFrame(
         [(i, f"a b c d e f g h token{i}") for i in range(20)],
         "doc_id long, text string",
     )
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    spark.catalog.clearCache()
-    ngram_jaccard_pairs(
-        d, "doc_id", "text", 0.5, materialize=False, demote_hot_df=0.1
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with intermediates() as s:
+        ngram_jaccard_pairs(d, "doc_id", "text", 0.5, demote_hot_df=0.1).count()
+        held = [df for df, kind in s._held if kind == "persist"]
+        assert len(held) == 1
+        assert len(set(jsc.getPersistentRDDs().keySet().toArray()) - before) == 1
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+    assert not held[0].is_cached
+
+
+def _dirty_minhash_corpus(spark, tmp_path):
+    """A corpus with 12 exact duplicates plus a null-id copy, a near-dup
+    pair, an id shared by two unrelated docs (one of them a near-dup of
+    another doc), a doc too short to shingle and unrelated docs. Doc
+    families share no 5-shingle, so every pair is either near-identical
+    (Jaccard >= 0.9, an LSH candidate w.p. ~1) or disjoint. Read from
+    one parquet file, the narrow single-partition scan shape."""
+
+    def fam(f, n=30):
+        return " ".join(f"f{f}w{i}" for i in range(n))
+
+    rows = [(i, fam(0)) for i in range(1, 13)] + [(None, fam(0))]
+    rows += [(20, fam(1)), (21, fam(1) + " extra")]
+    rows += [(30, fam(2)), (30, fam(3)), (31, fam(2) + " tail")]
+    rows += [(40, "too short doc")]
+    rows += [(50 + f, fam(10 + f)) for f in range(6)]
+    path = str(tmp_path / "dirty")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    return spark.read.parquet(path), rows
+
+
+def _exact_pairs(rows, threshold, rounding=None):
+    """(id_a, id_b, jaccard) over every doc-copy pair with id_a < id_b
+    and 5-shingle-set Jaccard >= threshold: what candidate generation
+    plus the by-id verify join return when every such pair is a
+    candidate."""
+
+    def sh(t):
+        w = t.split()
+        return {" ".join(w[i : i + 5]) for i in range(len(w) - 4)}
+
+    out = set()
+    for ia, ta in rows:
+        for ib, tb in rows:
+            if ia is None or ib is None or not ia < ib:
+                continue
+            a, b = sh(ta), sh(tb)
+            if not a or not b:
+                continue
+            j = len(a & b) / len(a | b)
+            if j >= threshold:
+                out.add((ia, ib, round(j, rounding) if rounding else j))
+    return out
+
+
+def test_minhash_dirty_corpus_rows_and_schema(spark, tmp_path):
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from xlearning_spark.operators.dedup import (
+        minhash_candidate_pairs,
+        minhash_signatures,
     )
-    assert not cm.isEmpty()  # demotion forced the persist
-    spark.catalog.clearCache()
-    ngram_jaccard_pairs(d, "doc_id", "text", 0.5, materialize=False)
-    assert cm.isEmpty()  # plain opt-out stays pure-lazy
+    from xlearning_spark.operators.sketch import portable_minhash_pairs
+
+    df, rows = _dirty_minhash_corpus(spark, tmp_path)
+    ids = StructType(
+        [StructField("id_a", LongType(), True), StructField("id_b", LongType(), True)]
+    )
+    sigs = minhash_signatures(df, "doc_id", "text")
+    exact = {(a, b) for a in range(1, 13) for b in range(a + 1, 13)}
+    near = {(20, 21), (30, 31)}
+    # The 13-member exact-duplicate bucket keeps its 5 lowest ids; the
+    # null id sorts first and takes one of the slots.
+    capped = {(a, b) for a in range(1, 5) for b in range(a + 1, 5)}
+    for max_bucket, want in ((1000, exact | near), (5, capped | near)):
+        cand = minhash_candidate_pairs(sigs, "doc_id", max_bucket=max_bucket)
+        assert cand.schema == ids
+        assert {tuple(r) for r in cand.collect()} == want
+
+    for got, threshold, rounding in (
+        (minhash_near_duplicates(df, "doc_id", "text"), 0.7, None),
+        (portable_minhash_pairs(df, "doc_id", "text"), 0.5, 8),
+    ):
+        assert got.schema == StructType(
+            ids.fields + [StructField("jaccard", DoubleType(), True)]
+        )
+        rows_got = [tuple(r) for r in got.collect()]
+        assert len(rows_got) == len(set(rows_got))
+        assert set(rows_got) == _exact_pairs(rows, threshold, rounding)
+
+
+def test_bucket_pairs_match_bucket_self_join(spark):
+    # Posting lists give the rows and the schema of the capped bucket
+    # self-join they replaced: null ids take a capped slot (they sort
+    # first) but pair with nothing, duplicate ids share a list, and the
+    # pair columns keep the id column's nullability.
+    from pyspark.sql import Window
+
+    from xlearning_spark.operators.dedup import bucket_pairs
+
+    def self_join(banded, max_bucket):
+        if max_bucket is not None:
+            w = Window.partitionBy("band", "key").orderBy("id")
+            banded = banded.withColumn("__rn", F.row_number().over(w)).filter(
+                F.col("__rn") <= max_bucket
+            )
+        a = banded.select("band", "key", F.col("id").alias("id_a"))
+        b = banded.select("band", "key", F.col("id").alias("id_b"))
+        return (
+            a.join(b, ["band", "key"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+
+    members = {
+        (0, "k1"): [None, 5, 3, 3, 1, 7, 9, 2],
+        (0, "k2"): [4],
+        (1, "k1"): [1, 2],
+        (1, "k9"): [None, None, 8, 6],
+    }
+    rows = [(b, k, i) for (b, k), ids in members.items() for i in ids]
+    nullable = spark.createDataFrame(rows, "band int, key string, id long")
+    strict = spark.createDataFrame(
+        [r for r in rows if r[2] is not None], "band int, key string, id long not null"
+    )
+    for banded in (nullable, strict):
+        for max_bucket in (None, 1000, 5, 2):
+            got = bucket_pairs(banded, "id", ["band", "key"], max_bucket)
+            want = self_join(banded, max_bucket)
+            assert got.schema == want.schema
+            assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_minhash_pipelines_leave_no_cached_frames(spark, tmp_path):
+    # Neither MinHash pipeline caches anything: after an action the
+    # session's persistent-RDD set is unchanged.
+    from xlearning_spark.operators.sketch import portable_minhash_pairs
+
+    df, _ = _dirty_minhash_corpus(spark, tmp_path)
+    jsc = spark.sparkContext._jsc
+    for pipeline in (minhash_near_duplicates, portable_minhash_pairs):
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        pipeline(df, "doc_id", "text").count()
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) == before, pipeline
 
 
 def test_sq8_recall_and_code_invariance(spark):

@@ -327,29 +327,24 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 # ------------------------------------------- conditional scan spread (r14)
 
 def test_spread_small_scan_probe_classifies_plans(spark):
-    # Narrow single-partition frame -> spread fires (partitions rise to
-    # session parallelism) and the smallness verdict is True.
+    # Narrow single-partition frame -> the probe says small and the
+    # spread fires (partitions rise to session parallelism).
     from xlearning_spark.operators.sharding import (
         probe_small_scan,
         spread_small_scan,
-        spread_small_scan_ex,
     )
 
     docs = read_table(spark, SF_SMOKE, "documents")
     n_sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
     narrow = docs.select("doc_id", F.length("text").alias("n"))
     assert probe_small_scan(narrow, n_sess) is True
-    spread, small = spread_small_scan_ex(narrow)
-    assert small is True
-    assert spread.rdd.getNumPartitions() == n_sess
+    assert spread_small_scan(narrow).rdd.getNumPartitions() == n_sess
 
     # Wide-operator frames are refused WITHOUT probing (an .rdd probe
-    # under AQE would execute their shuffle stages) and the verdict is
-    # False, so callers skip corpus-scale persists.
+    # under AQE would execute their shuffle stages) and pass through.
     agg = docs.groupBy("source").count()
     assert probe_small_scan(agg, n_sess) is False
-    same, small = spread_small_scan_ex(agg)
-    assert small is False and same is agg
+    assert spread_small_scan(agg) is agg
 
     # ADVICE r13 regression: argument text containing a wide-node WORD
     # (a column alias like "Sort" / relation name like "Join") must NOT

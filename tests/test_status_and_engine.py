@@ -296,3 +296,92 @@ def test_default_shuffle_partitions_contract(monkeypatch, spark):
     # engine.py conf comment.)
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(derived)
     assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+
+
+# ------------------------------------------------- intermediates scope
+
+def test_intermediates_scope_owns_its_frames(spark):
+    import pytest
+
+    from xlearning_spark.engine import intermediates, scope
+
+    jsc = spark.sparkContext._jsc
+
+    def live():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    base = live()
+    # A raising body still frees every frame it registered.
+    with pytest.raises(RuntimeError):
+        with intermediates():
+            scope().persist(spark.range(10)).count()
+            scope().checkpoint(spark.range(20), eager=True)
+            assert len(live() - base) == 2
+            raise RuntimeError("boom")
+    assert live() - base == set()
+
+    # keep hands a frame to the enclosing scope, which frees it on exit;
+    # release frees one early.
+    with intermediates() as outer:
+        with intermediates():
+            kept = scope().keep(scope().checkpoint(spark.range(30), eager=True))
+            early = scope().persist(spark.range(40))
+            early.count()
+            scope().release(early)
+            assert not early.is_cached
+        assert kept.count() == 30
+        assert [df for df, _ in outer._held] == [kept]
+        assert len(live() - base) == 1
+    assert live() - base == set()
+
+    # With no scope open, a registration is a plain persist the caller owns.
+    plain = scope().persist(spark.range(50))
+    plain.count()
+    with intermediates():
+        pass
+    assert plain.is_cached and len(live() - base) == 1
+    plain.unpersist(blocking=True)
+
+
+def test_only_the_engine_places_caching_calls():
+    # Who owns a cached intermediate and when it dies is decided behind
+    # engine.intermediates: operators cache through ``scope()``. Only
+    # the engine and the similarity index handles (long-lived objects
+    # their caller releases) may call Spark's caching methods directly.
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "xlearning_spark"
+    index_owner = re.compile(r"^(IvfIndex|PqIndex|Sq8Index|build_\w+_index|load_\w+_index)$")
+    banned = {"persist", "unpersist", "localCheckpoint", "checkpoint"}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "engine.py":
+            continue
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            if rel == "operators/similarity.py" and index_owner.match(
+                getattr(top, "name", "")
+            ):
+                continue
+            for node in ast.walk(top):
+                names = {getattr(node, a, None) for a in ("id", "attr", "name", "asname")}
+                if "release_checkpoint" in names:
+                    offenders.append(f"{rel}:{top.lineno} release_checkpoint")
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in banned
+                ):
+                    continue
+                recv = node.func.value
+                via_scope = (
+                    isinstance(recv, ast.Call)
+                    and isinstance(recv.func, ast.Name)
+                    and recv.func.id == "scope"
+                )
+                if not via_scope:
+                    offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
+    assert not offenders, offenders

@@ -356,46 +356,80 @@ def test_neardup_ingest_accumulates_novel_docs(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 3, 6, 8}
 
 
-def test_neardup_ingest_releases_per_batch_caches(spark, tmp_path):
-    # VERDICT r13 item 3: the pair generator persists its shingle frame
-    # per micro-batch; a long-running stream must release it
-    # DETERMINISTICALLY after each batch commits, not lean on LRU
-    # eviction — the persistent-RDD set must return to its pre-drain
-    # baseline after a multi-batch drain (one source file per
-    # micro-batch, so this exercises several foreachBatch invocations).
+@pytest.mark.parametrize(
+    "ingest",
+    [
+        "neardup_ingest",
+        "excise_ingest",
+        "scored_ingest",
+        "tokenized_ingest",
+        "incremental_partition_save",
+        "streaming_hll_distinct",
+    ],
+)
+def test_ingest_releases_per_batch_caches(spark, tmp_path, ingest):
+    # VERDICT r13 item 3: a long-running stream must free each batch's
+    # cached frames when the batch ends, not lean on LRU eviction — the
+    # persistent-RDD set must return to its pre-drain baseline after a
+    # multi-batch drain (one source file per micro-batch, so this
+    # exercises several foreachBatch invocations).
     import os
 
+    from xlearning_spark.operators.text import lcg_weights, save_bpe_merge_table
+
     src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(src)
-    schema = "doc_id bigint, text string"
+    schema = "doc_id bigint, text string, part string"
     for i in range(6):
         spark.createDataFrame(
-            [(i, f"w{i} x{i} y{i} z{i} common tail words {i}")], schema
+            [(i, f"w{i} x{i} y{i} z{i} common tail words {i}", f"p{i % 2}")], schema
         ).coalesce(1).write.mode("append").parquet(src)
     # Early exits: a batch whose every doc loses (a near-dup of doc 0,
     # already in the corpus) and an empty batch.
     spark.createDataFrame(
-        [(100, "w0 x0 y0 z0 common tail words 0 extra")], schema
+        [(100, "w0 x0 y0 z0 common tail words 0 extra", "p0")], schema
     ).coalesce(1).write.mode("append").parquet(src)
     spark.createDataFrame([], schema).coalesce(1).write.mode("append").parquet(src)
+    model = str(tmp_path / "bpe")
+    save_bpe_merge_table(spark, [("w", "0", 3), ("x", "0", 2)], model)
+    run = {
+        "neardup_ingest": lambda s: st.neardup_ingest(
+            s, out, ckpt, threshold=0.5, shingle_size=2
+        ),
+        "excise_ingest": lambda s: st.excise_ingest(s, out, state, ckpt, k=2),
+        "scored_ingest": lambda s: st.scored_ingest(
+            s, out, ckpt, lcg_weights(32, seed=3)
+        ),
+        "tokenized_ingest": lambda s: st.tokenized_ingest(s, out, ckpt, model),
+        # key_cols: every batch after the first carries rows over (the
+        # merge path's checkpoint).
+        "incremental_partition_save": lambda s: st.incremental_partition_save(
+            s, out, ckpt, partition_by=["part"], key_cols=["doc_id"]
+        ),
+        "streaming_hll_distinct": lambda s: st.streaming_hll_distinct(
+            s, "text", state, ckpt
+        ),
+    }[ingest]
 
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
-    written = st.neardup_ingest(
+    written = run(
         spark.readStream.format("parquet")
         .schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .load(src),
-        corpus, ckpt, threshold=0.5, shingle_size=2,
+        .load(src)
     )
-    assert len(written) >= 4  # several batches actually ran
-    assert 100 not in {r.doc_id for r in spark.read.parquet(corpus).collect()}
+    # Several batches actually ran.
+    assert len([f for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit()]) == 8
+    if ingest == "neardup_ingest":
+        assert len(written) >= 4
+        assert 100 not in {r.doc_id for r in spark.read.parquet(out).collect()}
     after = set(jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set(), (
-        f"neardup_ingest leaked {len(after - before)} persisted RDDs "
-        f"across {len(written)} micro-batches: {sorted(after - before)}"
+        f"{ingest} leaked {len(after - before)} persisted RDDs: {sorted(after - before)}"
     )
 
 

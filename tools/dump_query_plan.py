@@ -1,7 +1,9 @@
 """Dump one formatted physical plan per named query to a file.
 
-Usage: python tools/dump_query_plan.py OUT_SUFFIX QUERY [QUERY ...]
-Writes plans/r13/<query>_<OUT_SUFFIX>.txt for each query at sf0.1.
+Usage: SPARK_GRAFT_PLANS_ROUND=ROUND python tools/dump_query_plan.py OUT_SUFFIX QUERY [QUERY ...]
+Writes plans/<ROUND>/<query>_<OUT_SUFFIX>.txt for each query at sf0.1
+(SPARK_GRAFT_SF_DIR overrides the scale directory). ROUND is required,
+so a run never overwrites an earlier round's record by default.
 """
 
 from __future__ import annotations
@@ -14,6 +16,10 @@ sys.path.insert(0, REPO)
 
 
 def main() -> int:
+    plans_round = os.environ.get("SPARK_GRAFT_PLANS_ROUND")
+    if not plans_round or len(sys.argv) < 3:
+        print(__doc__.strip().splitlines()[2], file=sys.stderr)
+        return 2
     suffix = sys.argv[1]
     names = sys.argv[2:]
     from xlearning_spark.engine import build_session
@@ -28,7 +34,9 @@ def main() -> int:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        out = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"), f"{name}_{suffix}.txt")
+        out_dir = os.path.join(REPO, "plans", plans_round)
+        os.makedirs(out_dir, exist_ok=True)
+        out = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(out, "w") as fh:
             fh.write(plan)
         print("wrote", out)

@@ -339,9 +339,9 @@ def _bpe_trainer_plan_guard(spark, sf_dir: str) -> None:
             "Exchange + TakeOrderedAndProject argmax"
         )
     finally:
-        from xlearning_spark.operators.dedup import release_checkpoint
+        from xlearning_spark.engine import scope
 
-        release_checkpoint(vocab)
+        scope().release(vocab)
 
 
 def _ingest_src_for(spark, sf_dir: str) -> str:
@@ -688,9 +688,9 @@ along.
 
 Eager checkpoint release (r10, VERDICT r9 item 4): the residual
 cleaner debt itself is now attacked at the source — the iterative
-operators (`connected_components`, and `learn_bpe_merges` via the
-shared `release_checkpoint` helper) free each round's checkpoint
-blocks the moment the next round materializes, instead of waiting
+operators (`connected_components` and `learn_bpe_merges`, through
+the release step of the `engine.intermediates` scope) free each
+round's checkpoint blocks the moment the next round materializes, instead of waiting
 for the async ContextCleaner; regression tests assert at most the
 returned frame's blocks stay cached (zero for the BPE trainer,
 whose result is a driver-side list). The q53/q80 table rows are

@@ -17,9 +17,12 @@ Scale notes (100 TB design, tested on local[32]):
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from xlearning_spark.sources import TABLES, read_table  # noqa: F401  (re-export)
 from xlearning_spark.sources import load_tables as _load_tables
@@ -235,6 +238,139 @@ class Engine:
         if not self._registered:
             self.register_tables()
         return self.spark.sql(query)
+
+
+class Intermediates:
+    """A scope that owns cached intermediates: frames registered with
+    :meth:`persist` or :meth:`checkpoint` are freed when the scope
+    exits (see :func:`intermediates`)."""
+
+    def __init__(self, parent: Intermediates | None):
+        self._parent = parent
+        self._held: list[tuple[DataFrame, str]] = []  # (frame, kind)
+
+    def _hold(self, df: DataFrame, kind: str) -> None:
+        self._held.append((df, kind))
+
+    def _drop(self, df: DataFrame) -> str | None:
+        for i, (held, kind) in enumerate(self._held):
+            if held is df:
+                del self._held[i]
+                return kind
+        return None
+
+    def persist(
+        self, df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+    ) -> DataFrame:
+        out = df.persist(level)
+        self._hold(out, "persist")
+        return out
+
+    def checkpoint(
+        self, df: DataFrame, eager: bool, reliable: bool = False
+    ) -> DataFrame:
+        """``localCheckpoint(eager)``, or a reliable ``checkpoint(eager)``
+        into the session's checkpoint directory when ``reliable``."""
+        out = df.checkpoint(eager) if reliable else df.localCheckpoint(eager)
+        self._hold(out, "reliable" if reliable else "local")
+        return out
+
+    def release(self, df: DataFrame) -> None:
+        """Free ``df`` now (round-by-round loops free each superseded
+        round as soon as the next one is materialized)."""
+        _free(df, self._drop(df) or ("persist" if df.is_cached else "local"))
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand ``df`` to the enclosing scope, which then frees it on
+        its own exit; with no enclosing scope it is nobody's."""
+        kind = self._drop(df)
+        if kind is not None:  # only an opened scope holds frames
+            self._parent._hold(df, kind)
+        return df
+
+    def _close(self) -> None:
+        while self._held:
+            _free(*self._held.pop())
+
+
+def _free(df: DataFrame, kind: str) -> None:
+    """Free a frame's storage EAGERLY: unpersist a persisted frame,
+    drop the blocks of a ``localCheckpoint``, delete the directory of
+    a reliable ``checkpoint``. Waiting for the async ContextCleaner to
+    catch up with driver GC showed up as multi-second full-GC debt in
+    the 16x scale envelopes of every iterative operator (VERDICT r9
+    item 4).
+
+    Freeing is an optimization only: any failure must never poison a
+    correct run, so it degrades to leaving the frame to the cleaner.
+    A deleted reliable checkpoint is deleted again by the cleaner
+    later, a harmless no-op under Hadoop's idempotent
+    ``FileSystem.delete`` (some filesystems may log a warning)."""
+    try:
+        if kind == "persist":
+            df.unpersist()
+            return
+        rdd = df._jdf.queryExecution().analyzed().rdd()  # LogicalRDD's RDD
+        if kind == "local":
+            rdd.unpersist(False)
+            return
+        f = rdd.getCheckpointFile()
+        if f.isDefined():
+            sc = df.sparkSession.sparkContext
+            p = sc._jvm.org.apache.hadoop.fs.Path(f.get())
+            p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
+    except Exception:
+        return
+
+
+class _Unscoped(Intermediates):
+    """Where registrations go with no scope open: nobody owns them."""
+
+    def _hold(self, df: DataFrame, kind: str) -> None:
+        pass
+
+
+_SCOPE: contextvars.ContextVar[Intermediates] = contextvars.ContextVar(
+    "xlearning_spark_intermediates", default=_Unscoped(None)
+)
+
+
+def scope() -> Intermediates:
+    """The innermost open :func:`intermediates` scope of this thread.
+    With none open, a scope that owns nothing: its ``persist`` and
+    ``checkpoint`` are the plain Spark calls and the caller owns the
+    frame, ``keep`` is a no-op and ``release`` still frees."""
+    return _SCOPE.get()
+
+
+@contextlib.contextmanager
+def intermediates():
+    """Open a scope that owns the cached intermediates registered in it.
+
+    Operators cache through ``scope().persist(df, level)`` and
+    ``scope().checkpoint(df, eager, reliable=False)``, which register
+    the frame with the innermost open scope. When the block exits,
+    normally or by an exception, the scope frees every frame it still
+    holds; ``release(df)`` frees one earlier, and ``keep(df)`` hands
+    one to the enclosing scope (the result an operator returns, whose
+    blocks its caller reads). Scopes are per thread
+    (``contextvars``); a foreachBatch body opens its own.
+
+    So an intermediate lives only as long as the unit of work that made
+    it, as the reference's epoch-0 input tee dies with its container
+    (HboxContainer.java:1158-1199). Each micro-batch of a streaming
+    drain and each job submit is one scope; ``connected_components``
+    and the BPE trainer are scopes of their own and free their rounds
+    one by one. Plain batch callers (queries, benchmarks) open none:
+    their operators persist as before and the caller owns the frames.
+    """
+    s = Intermediates(_SCOPE.get())
+    token = _SCOPE.set(s)
+    try:
+        yield s
+    finally:
+        _SCOPE.reset(token)
+        s._close()
 
 
 #: Re-export: the canonical implementation lives in sources (it also

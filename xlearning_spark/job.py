@@ -31,6 +31,7 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xlearning_spark.engine import intermediates
 from xlearning_spark.operators.pipe import pipe_lines
 from xlearning_spark.operators.sharding import epoch_replay, round_robin_assignment
 from xlearning_spark.sources import table_exists
@@ -256,16 +257,14 @@ def _submit_once(spark: SparkSession, spec: JobSpec) -> JobResult:
             ]
         )
 
-    # epoch_replay persists its input DISK_ONLY for this submit only
-    # (the reference's epoch-0 tee dies with its container). Left live,
-    # a later submit over the same root path is answered from it:
-    # Spark's cache lookup matches the plan, not the file listing, so
-    # files added since go unread.
-    replayed = rows if spec.epochs > 1 else None
-    if replayed is not None:
-        rows = epoch_replay(rows, spec.epochs).drop("epoch")
-
-    try:
+    # The submit is one intermediates scope: epoch_replay's DISK_ONLY
+    # input cache lives for this submit only (the reference's epoch-0
+    # tee dies with its container). Left live, a later submit over the
+    # same root path is answered from it: Spark's cache lookup matches
+    # the plan, not the file listing, so files added since go unread.
+    with intermediates():
+        if spec.epochs > 1:
+            rows = epoch_replay(rows, spec.epochs).drop("epoch")
         if spec.command is not None:
             placeholder = spec.input_strategy == "PLACEHOLDER" and spec.epochs == 1
             out = pipe_lines(
@@ -295,6 +294,3 @@ def _submit_once(spark: SparkSession, spec: JobSpec) -> JobResult:
             write_gzip_text(out.select(F.col("line").cast("string")), spec.output)
         n = spark.read.parquet(spec.output).count() if spec.output_format == "parquet" else spark.read.text(spec.output).count()
         return JobResult(spec.output, n, is_committed(spec.output, spark), files)
-    finally:
-        if replayed is not None:
-            replayed.unpersist()

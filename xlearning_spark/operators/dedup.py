@@ -21,53 +21,14 @@ from typing import Any, NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
-from pyspark.storagelevel import StorageLevel
 
+from xlearning_spark.engine import intermediates, scope
 from xlearning_spark.functions import tokens, with_shingle_hashes
 
 # Mersenne prime for the universal-hash family h_i(x) = (a_i*x + b_i) mod p.
 # p = 2^31 - 1 keeps a*x + b < 2^62: no bigint overflow under ANSI mode
 # (Spark 4 default), and the multiply-mod stays a plain JVM expression.
 _P = (1 << 31) - 1
-
-
-def release_checkpoint(ck: DataFrame, reliable: bool = False) -> None:
-    """Free a checkpointed frame's storage EAGERLY — blocks for
-    ``localCheckpoint``, the checkpoint directory for a reliable
-    ``checkpoint`` (``reliable=True``) — instead of waiting for the
-    async ContextCleaner to catch up with driver GC (VERDICT r9 item
-    4: the cleaner lag showed up as multi-second full-GC debt in the
-    16x scale envelopes of every iterative operator). Callers use this
-    the moment a superseding round is materialized: the new round is
-    checkpoint-truncated, so it never re-reads the old storage.
-
-    Release is an optimization only — any failure must never poison a
-    correct run, so it degrades to the old leave-it-to-GC path.
-
-    Note (ADVICE r10): the ``reliable=True`` path deletes the
-    checkpoint directory outside Spark's ContextCleaner, which will
-    later attempt its own delete of the same path — a harmless no-op
-    under Hadoop's idempotent ``FileSystem.delete``, though some
-    filesystems may log a spurious warning; the broad except guard
-    above covers either order.
-    """
-    try:
-        plan = ck._jdf.queryExecution().analyzed()
-        rdd = plan.rdd()  # LogicalRDD's materialized RDD
-        if not reliable:
-            rdd.unpersist(False)
-        else:
-            f = rdd.getCheckpointFile()
-            if f.isDefined():
-                spark = ck.sparkSession
-                jvm = spark.sparkContext._jvm
-                p = jvm.org.apache.hadoop.fs.Path(f.get())
-                fs = p.getFileSystem(
-                    spark.sparkContext._jsc.hadoopConfiguration()
-                )
-                fs.delete(p, True)
-    except Exception:
-        return  # degraded: ContextCleaner frees it eventually
 
 
 def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
@@ -131,28 +92,51 @@ def minhash_signatures(
     return mh
 
 
+def bucket_pairs(
+    banded: DataFrame,
+    id_col: str,
+    key_cols: list[str],
+    max_bucket: int | None,
+) -> DataFrame:
+    """Distinct (id_a, id_b) pairs, id_a < id_b, of the ids that share a
+    bucket ``key_cols`` — from posting lists, not a bucket self-join:
+    one groupBy collects each bucket's ids, sorted ascending, and the
+    pairs within each list are emitted in place. The pair generation
+    reads each banded row once, so nothing upstream needs a cache.
+
+    ``max_bucket`` (None: no cap) keeps only the lowest ids of a
+    degenerate bucket (a null id sorts first and takes a slot). Ids are
+    collected as structs so that a null id keeps its slot and the pair
+    columns keep the id column's type and nullability.
+    """
+    ids = F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("id"))))
+    if max_bucket is not None:
+        ids = F.slice(ids, 1, max_bucket)
+    lists = banded.groupBy(*key_cols).agg(ids.alias("__ids"))
+    # Each member pairs with the members after it; two explodes stream
+    # the pairs instead of building one array of them per list.
+    heads = lists.select("__ids", F.posexplode("__ids").alias("__i", "__a"))
+    tail = F.slice("__ids", F.col("__i") + 2, F.size("__ids") - F.col("__i") - 1)
+    return (
+        heads.select(F.col("__a.id").alias("id_a"), F.explode(tail).alias("__b"))
+        .select("id_a", F.col("__b.id").alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct()
+    )
+
+
 def minhash_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
     num_hashes: int = 64,
     bands: int = 16,
     max_bucket: int = 1000,
-    cache_buckets: bool = False,
 ) -> DataFrame:
     """LSH banding: docs agreeing on any full band become a candidate pair.
 
     Scale controls: ``max_bucket`` caps degenerate buckets (e.g. the
     empty-document signature) so no bucket explodes into O(n²); the
-    pair join is bucket-local.
-
-    ``cache_buckets=True`` persists the capped bucket rows (slim:
-    band, key, id): they feed BOTH self-join sides, and without a
-    materialization point each side re-derives the whole subtree —
-    including the ``num_hashes`` minhash aggregates per document
-    (verified in plans/r14/q48_*: the 64-expression signature project
-    appears twice in the before-plan, once after). Callers gate it on
-    a small input (ADVICE r13 persist discipline); default off keeps
-    the pure-lazy plan.
+    pairs come from per-bucket posting lists (:func:`bucket_pairs`).
     """
     rows_per_band = num_hashes // bands
     banded = signatures.select(
@@ -175,26 +159,7 @@ def minhash_candidate_pairs(
             )
         ).alias("band", "band_key"),
     )
-    # Cap bucket size; deterministic members kept (lowest ids).
-    w = Window.partitionBy("band", "band_key").orderBy(id_col)
-    bounded = banded.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= max_bucket
-    )
-    if cache_buckets:
-        bounded = bounded.persist(StorageLevel.MEMORY_AND_DISK)
-    a = bounded.select(
-        F.col("band"), F.col("band_key"), F.col(id_col).alias("id_a")
-    )
-    b = bounded.select(
-        F.col("band"), F.col("band_key"), F.col(id_col).alias("id_b")
-    )
-    pairs = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return pairs
+    return bucket_pairs(banded, id_col, ["band", "band_key"], max_bucket)
 
 
 def minhash_near_duplicates(
@@ -213,7 +178,7 @@ def minhash_near_duplicates(
     expensive exact computation is proportional to candidate volume,
     not corpus size squared.
     """
-    from xlearning_spark.operators.sharding import spread_small_scan_ex
+    from xlearning_spark.operators.sharding import spread_small_scan
 
     params = _hash_params(num_hashes)
     # r13 (guide §2.3/§2.5): one shared shingle-hash frame feeds BOTH
@@ -227,15 +192,12 @@ def minhash_near_duplicates(
     # bench protocol, paired variants in one session): writing the
     # wide array<bigint> rows to storage inside the timed run costs
     # more than re-running the codegen tokenize+hash per branch —
-    # persist+buckets 3.1 s vs buckets-only 2.1 s median. Only the
-    # SLIM capped bucket rows are cached (cache_buckets below), which
-    # dedupes the 64-aggregate signature subtree across the self-join
-    # sides — that one pays for itself. At corpus scale a pinned copy
-    # of the shingle-hash frame would risk executor disks anyway
-    # (ADVICE r13), so lazy is also the scale-correct default.
-    spread, small = spread_small_scan_ex(df)
+    # persist+buckets 3.1 s vs buckets-only 2.1 s median. At corpus
+    # scale a pinned copy would risk executor disks anyway (ADVICE
+    # r13). The posting-list banding reads the signatures once, so
+    # the plan is lazy end to end.
     hashed = with_shingle_hashes(
-        spread.filter(F.size(tokens(text_col)) >= shingle_size),
+        spread_small_scan(df).filter(F.size(tokens(text_col)) >= shingle_size),
         text_col,
         "__sh0",
         shingle_size,
@@ -253,9 +215,7 @@ def minhash_near_duplicates(
             ]
         ).alias("minhash"),
     )
-    pairs = minhash_candidate_pairs(
-        sigs, id_col, num_hashes, bands, cache_buckets=small
-    )
+    pairs = minhash_candidate_pairs(sigs, id_col, num_hashes, bands)
 
     # Exact Jaccard over distinct shingle-hash sets (identical to the
     # string-shingle Jaccard modulo 2^-31 collision probability).
@@ -279,11 +239,9 @@ def ngram_jaccard_pairs(
     text_col: str,
     threshold: float = 0.5,
     shingle_size: int = 5,
-    materialize: bool = True,
     delta_ids: DataFrame | None = None,
     demote_hot_df: float | None = None,
     max_hot: int = 256,
-    persisted_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact n-gram (word-shingle) Jaccard near-dup pairs via prefix
     filtering -> (id_a, id_b, jaccard), jaccard >= threshold.
@@ -337,22 +295,15 @@ def ngram_jaccard_pairs(
     string-shingle Jaccard modulo ~2^-64 collisions — the same hashing
     assumption the MinHash path stands on).
 
-    ``materialize=True`` (default) repartitions the shingle frame to the
-    session's shuffle parallelism and persists it MEMORY_AND_DISK: the
-    frame feeds three plan branches (prefix keys twice, verify sides),
-    and without a materialization point Catalyst collapses the token
-    projection back into the shingle lambda per branch — re-tokenizing
-    every document ``shingle_size`` times per shingle — and a
-    single-file scan runs it all on one core (measured 13.7s -> 4.1s on
-    the sf0.1 documents fixture, local[32]). The persisted frame is
-    left for Spark's LRU cache manager to evict; pass
-    ``materialize=False`` for a pure-lazy plan (e.g. composing into a
-    larger pipeline that persists on its own terms). Exception:
-    ``demote_hot_df`` IMPLIES materialization regardless — its document-
-    frequency pass runs ``count()`` plus an explode/groupBy over the
-    shingle frame before the main job, which without the persist would
-    re-execute tokenization+shingling two extra times (exactly the
-    recomputation this knob exists to avoid paying at scale).
+    The shingle frame is persisted MEMORY_AND_DISK through the open
+    :func:`~xlearning_spark.engine.intermediates` scope: it feeds three
+    plan branches (prefix keys twice, verify sides) plus the
+    ``demote_hot_df`` document-frequency pass, and without a
+    materialization point Catalyst collapses the token projection back
+    into the shingle lambda per branch — re-tokenizing every document
+    ``shingle_size`` times per shingle — and a single-file scan runs it
+    all on one core (measured 13.7s -> 4.1s on the sf0.1 documents
+    fixture, local[32]).
 
     The reference has no similarity operators at all; this tier is the
     engine's LLM-data extension (SURVEY.md §2.12 L2).
@@ -398,19 +349,7 @@ def ngram_jaccard_pairs(
         )
         .withColumn("__m", F.size("__sh"))
     )
-    # demote_hot_df implies materialization: its df pass (count +
-    # explode/groupBy) and the main prefix/verify branches must reuse
-    # one computed shingle frame, not re-tokenize per branch.
-    if materialize or demote_hot_df is not None:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        # Deterministic release hook (VERDICT r13 item 3): a caller
-        # that consumes the result EAGERLY (streaming ingests run one
-        # sweep per micro-batch) passes a list and unpersists the
-        # collected frames once its action commits — a long-running
-        # stream otherwise accumulates one dead cached frame per batch
-        # and leans on LRU eviction under memory pressure (guide §5).
-        if persisted_out is not None:
-            persisted_out.append(base)
+    base = scope().persist(base)
     prefix_len = (
         F.col("__m") - F.ceil(F.col("__m") * F.lit(threshold)) + 1
     ).cast("int")
@@ -561,7 +500,6 @@ def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    final_ckpt_out: list[DataFrame] | None = None,
     driver_edge_limit: int = 2_000_000,
 ) -> DataFrame:
     """Min-label propagation over dup pairs -> (id, component) groups.
@@ -569,9 +507,7 @@ def connected_components(
     :func:`solve_components` does the work; a graph it solves on the
     driver comes back as a local frame of its arrays.
     """
-    sol = solve_components(
-        pairs, max_iter, checkpoint_dir, final_ckpt_out, driver_edge_limit
-    )
+    sol = solve_components(pairs, max_iter, checkpoint_dir, driver_edge_limit)
     if isinstance(sol, DriverComponents):
         return sol.frame(pairs.sparkSession)
     return sol
@@ -581,7 +517,6 @@ def solve_components(
     pairs: DataFrame,
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    final_ckpt_out: list[DataFrame] | None = None,
     driver_edge_limit: int = 2_000_000,
 ) -> DataFrame | DriverComponents:
     """Connected components of the dup pairs: the driver's arrays
@@ -611,203 +546,194 @@ def solve_components(
     use reliable ``checkpoint()`` snapshots that survive executor loss
     — the right default for a 100 TB corpus where a multi-hour rerun
     costs more than checkpoint I/O.
+
+    The call is one :func:`~xlearning_spark.engine.intermediates`
+    scope: the edge list and every round are freed when it returns,
+    each superseded round as soon as the next one is materialized. The
+    distributed answer reads the final round's checkpoint, which is
+    kept for the enclosing scope (with none open it is left to the
+    ContextCleaner).
     """
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    reliable = checkpoint_dir is not None
 
     def _materialize(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        # r13 (guide §1.2 — fewer passes/barriers): LAZY local
-        # checkpoint. The convergence probe that always follows is the
-        # materializing action, so each round runs ONE job (label joins
-        # + block caching + probe count fused) instead of two (eager
+        # Reliable mode checkpoints eagerly. r13 (guide §1.2 — fewer
+        # passes/barriers): local mode checkpoints LAZILY. The
+        # convergence probe that always follows is the materializing
+        # action, so each round runs ONE job (label joins + block
+        # caching + probe count fused) instead of two (eager
         # materialize, then a separate probe scan). Lineage truncation
         # and block caching are identical — only the job barrier goes.
-        return df.localCheckpoint(eager=False)
+        return scope().checkpoint(df, eager=reliable, reliable=reliable)
 
-    def _release(ck: DataFrame) -> None:
-        # module-level release_checkpoint, bound to this run's
-        # checkpoint mode (see its docstring for the rationale).
-        release_checkpoint(ck, reliable=checkpoint_dir is not None)
+    with intermediates():
+        edges = _materialize(
+            # Both edge directions via ONE explode instead of
+            # pairs ∪ pairs.swapped (r14, guide §1.2 don't-compute-twice):
+            # union evaluates the ``pairs`` subtree once PER BRANCH, so an
+            # expensive upstream pair generator (q53: the exact-Jaccard
+            # self-join, ~580k verified pairs at sf0.1) ran twice inside
+            # the single edges-build job. The explode reads each pair row
+            # once and emits both directions from it — same rows, half the
+            # pair-generator work (measured: the edges job drops ~1.9x).
+            pairs.select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+                        ),
+                        F.struct(
+                            F.col("id_b").alias("src"), F.col("id_a").alias("dst")
+                        ),
+                    )
+                ).alias("__e")
+            )
+            .select("__e.src", "__e.dst")
+            # A pair with a null endpoint is no edge: both of its rows go,
+            # so the driver solve never sees a null id and both paths agree.
+            # Filtered on the generated columns, so the predicate stays
+            # here and the upstream pair plan is unchanged.
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            # r13 (guide §2.4): hash-partition the static edge list by the
+            # per-round join key BEFORE checkpointing — checkpoint preserves
+            # outputPartitioning, so every round's edges⋈labels join reads
+            # the edge blocks in place instead of re-shuffling the (corpus-
+            # scale) edge list once per round; only the small labels side
+            # exchanges. r14 (guide §2.4 share-one-exchange): dedup runs
+            # AFTER the dst repartition — hash(dst) clusters every
+            # duplicate (src, dst) row into one partition and satisfies
+            # the aggregate's ClusteredDistribution({src, dst}), so the
+            # distinct's own (src, dst) exchange is planned away: ONE
+            # edge-list shuffle at build instead of two (verified in
+            # plans/r14/q53_*).
+            .repartition("dst")
+            .dropDuplicates(["src", "dst"])
+            # Materialize once: the edge list is re-joined every iteration
+            # (plus the convergence probe), and an expensive upstream plan
+            # (e.g. a similarity join) would otherwise re-execute per round.
+        )
+        # Size-gated driver solve (r14, guide §1.2 the-distributed-
+        # algorithm; same device as learn_bpe_merge_table's in-cap driver
+        # trainer): the deduped edge list is usually orders of magnitude
+        # smaller than the corpus that produced it — near-dup graphs are
+        # sparse by construction. When it fits ``driver_edge_limit`` rows
+        # (~32 MB at the 2M default: two bigints/row), collect the slim
+        # (src, dst) pairs ONCE off the just-materialized checkpoint and
+        # run the same min-label + pointer-doubling fixpoint vectorized on
+        # the driver (:func:`_cc_local`): the whole iterate-until-stable
+        # tail — 3+ multi-stage Spark jobs of pure scheduling latency at
+        # fixture scale, each re-scanning the edge blocks — collapses into
+        # milliseconds of numpy. The fixpoint (every node -> min reachable
+        # id) is unique, so the answer is bit-identical to the distributed
+        # loop's (q53's recursive-CTE oracle certifies it). Graphs over
+        # the cap take the distributed rounds below, unchanged — the count
+        # that decides is the same action that materializes the checkpoint
+        # the rounds need anyway. Everything is computed from the inputs
+        # within this call: nothing persists across runs. Reliable-
+        # checkpoint callers (checkpoint_dir set — the real-cluster,
+        # fault-tolerant configuration) keep the distributed rounds
+        # regardless of size: they asked for executor-loss-surviving
+        # lineage, and a driver collect is the opposite trade.
+        n_edges = None if reliable else edges.count()
+        if n_edges is not None and n_edges <= driver_edge_limit:
+            import numpy as np
 
-    edges = _materialize(
-        # Both edge directions via ONE explode instead of
-        # pairs ∪ pairs.swapped (r14, guide §1.2 don't-compute-twice):
-        # union evaluates the ``pairs`` subtree once PER BRANCH, so an
-        # expensive upstream pair generator (q53: the exact-Jaccard
-        # self-join, ~580k verified pairs at sf0.1) ran twice inside
-        # the single edges-build job. The explode reads each pair row
-        # once and emits both directions from it — same rows, half the
-        # pair-generator work (measured: the edges job drops ~1.9x).
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-                    ),
+            id_field = edges.schema["src"]
+            if n_edges == 0:
+                empty = np.array([], dtype=np.int64)
+                return DriverComponents(empty, empty, id_field)
+            pdf = edges.toPandas()
+            src = pdf["src"].to_numpy()
+            dst = pdf["dst"].to_numpy()
+            # Edges carry both directions, so every endpoint appears in
+            # src; np.unique sorts ascending (numeric order / code-point
+            # string order — the same total order Spark's min uses).
+            nodes, src_idx = np.unique(src, return_inverse=True)
+            dst_idx = np.searchsorted(nodes, dst)
+            comp = _cc_local(nodes, src_idx, dst_idx)
+            return DriverComponents(nodes, comp, id_field)
+
+        labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
+            "component", F.col("id")
+        )
+        prev_ck: DataFrame | None = None
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.id)
+                .groupBy("src")
+                .agg(F.min("component").alias("nbr_min"))
+            )
+            new_labels = (
+                labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
+                .select(
+                    "id",
+                    F.col("component").alias("__old"),
+                    F.least(
+                        F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
+                    ).alias("component"),
                 )
-            ).alias("__e")
-        )
-        .select("__e.src", "__e.dst")
-        # A pair with a null endpoint is no edge: both of its rows go,
-        # so the driver solve never sees a null id and both paths agree.
-        # Filtered on the generated columns, so the predicate stays
-        # here and the upstream pair plan is unchanged.
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        # r13 (guide §2.4): hash-partition the static edge list by the
-        # per-round join key BEFORE checkpointing — checkpoint preserves
-        # outputPartitioning, so every round's edges⋈labels join reads
-        # the edge blocks in place instead of re-shuffling the (corpus-
-        # scale) edge list once per round; only the small labels side
-        # exchanges. r14 (guide §2.4 share-one-exchange): dedup runs
-        # AFTER the dst repartition — hash(dst) clusters every
-        # duplicate (src, dst) row into one partition and satisfies
-        # the aggregate's ClusteredDistribution({src, dst}), so the
-        # distinct's own (src, dst) exchange is planned away: ONE
-        # edge-list shuffle at build instead of two (verified in
-        # plans/r14/q53_*).
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-        # Materialize once: the edge list is re-joined every iteration
-        # (plus the convergence probe), and an expensive upstream plan
-        # (e.g. a similarity join) would otherwise re-execute per round.
-    )
-    # Size-gated driver solve (r14, guide §1.2 the-distributed-
-    # algorithm; same device as learn_bpe_merge_table's in-cap driver
-    # trainer): the deduped edge list is usually orders of magnitude
-    # smaller than the corpus that produced it — near-dup graphs are
-    # sparse by construction. When it fits ``driver_edge_limit`` rows
-    # (~32 MB at the 2M default: two bigints/row), collect the slim
-    # (src, dst) pairs ONCE off the just-materialized checkpoint and
-    # run the same min-label + pointer-doubling fixpoint vectorized on
-    # the driver (:func:`_cc_local`): the whole iterate-until-stable
-    # tail — 3+ multi-stage Spark jobs of pure scheduling latency at
-    # fixture scale, each re-scanning the edge blocks — collapses into
-    # milliseconds of numpy. The fixpoint (every node -> min reachable
-    # id) is unique, so the answer is bit-identical to the distributed
-    # loop's (q53's recursive-CTE oracle certifies it). Graphs over
-    # the cap take the distributed rounds below, unchanged — the count
-    # that decides is the same action that materializes the checkpoint
-    # the rounds need anyway. Everything is computed from the inputs
-    # within this call: nothing persists across runs. Reliable-
-    # checkpoint callers (checkpoint_dir set — the real-cluster,
-    # fault-tolerant configuration) keep the distributed rounds
-    # regardless of size: they asked for executor-loss-surviving
-    # lineage, and a driver collect is the opposite trade.
-    n_edges = edges.count() if checkpoint_dir is None else None
-    if n_edges is not None and n_edges <= driver_edge_limit:
-        import numpy as np
-
-        id_field = edges.schema["src"]
-        if n_edges == 0:
-            _release(edges)
-            empty = np.array([], dtype=np.int64)
-            return DriverComponents(empty, empty, id_field)
-        pdf = edges.toPandas()
-        src = pdf["src"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        # Edges carry both directions, so every endpoint appears in
-        # src; np.unique sorts ascending (numeric order / code-point
-        # string order — the same total order Spark's min uses).
-        nodes, src_idx = np.unique(src, return_inverse=True)
-        dst_idx = np.searchsorted(nodes, dst)
-        comp = _cc_local(nodes, src_idx, dst_idx)
-        _release(edges)
-        return DriverComponents(nodes, comp, id_field)
-
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "component", F.col("id")
-    )
-    prev_ck: DataFrame | None = None
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.col("component").alias("__old"),
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
             )
-        )
-        # Pointer doubling: component labels are themselves node ids, so
-        # jumping to the label's own label halves every label chain.
-        # Explicit l/r aliases scope every column reference: the
-        # self-join shares attribute ids on both sides and otherwise
-        # mis-resolves the join condition and silently joins wrong —
-        # caught by the union-find property test.
-        lookup = new_labels.select(
-            F.col("id").alias("__cid"), F.col("component").alias("__cc")
-        )
-        new_labels = (
-            new_labels.alias("l")
-            .join(
-                lookup.alias("r"),
-                F.col("l.component") == F.col("r.__cid"),
-                "left",
+            # Pointer doubling: component labels are themselves node ids, so
+            # jumping to the label's own label halves every label chain.
+            # Explicit l/r aliases scope every column reference: the
+            # self-join shares attribute ids on both sides and otherwise
+            # mis-resolves the join condition and silently joins wrong —
+            # caught by the union-find property test.
+            lookup = new_labels.select(
+                F.col("id").alias("__cid"), F.col("component").alias("__cc")
             )
-            .select(
-                F.col("l.id").alias("id"),
-                F.col("l.__old").alias("__old"),
-                F.least(
-                    F.col("l.component"),
-                    F.coalesce(F.col("r.__cc"), F.col("l.component")),
-                ).alias("component"),
+            new_labels = (
+                new_labels.alias("l")
+                .join(
+                    lookup.alias("r"),
+                    F.col("l.component") == F.col("r.__cid"),
+                    "left",
+                )
+                .select(
+                    F.col("l.id").alias("id"),
+                    F.col("l.__old").alias("__old"),
+                    F.least(
+                        F.col("l.component"),
+                        F.coalesce(F.col("r.__cc"), F.col("l.component")),
+                    ).alias("component"),
+                )
             )
+            # Checkpoint BEFORE the convergence probe: the probe executes
+            # the label joins, and an eager checkpoint afterwards would
+            # execute them a second time — probing the checkpointed frame
+            # makes each iteration run its joins exactly once, and because
+            # the pre-round label rides along as __old the probe is a pure
+            # filter scan, not a join against the previous frame.
+            new_ck = _materialize(new_labels)
+            probe = new_ck.filter(F.col("component") != F.col("__old"))
+            if reliable:
+                # Reliable mode: blocks are already materialized (eager),
+                # so the cheapest probe short-circuits at the first
+                # changed row.
+                changed = probe.limit(1).count()
+            else:
+                # Lazy-local mode (r13): the probe IS the materializing
+                # job — a full count guarantees every partition is
+                # computed and cached in this one job (a limit(1) would
+                # short-circuit, leaving partitions for a separate
+                # completion job and re-adding the barrier just removed).
+                changed = probe.count()
+            # The previous round's blocks are dead the moment new_ck is
+            # materialized — release them now, round by round.
+            if prev_ck is not None:
+                scope().release(prev_ck)
+            prev_ck = new_ck
+            if not changed:
+                # The result rides the final round's checkpoint blocks.
+                return scope().keep(new_ck).select("id", "component")
+            labels = new_ck.select("id", "component")
+        raise RuntimeError(
+            f"connected_components did not converge within {max_iter} iterations "
+            "(astronomically deep label chains); raise max_iter"
         )
-        # Checkpoint BEFORE the convergence probe: the probe executes
-        # the label joins, and an eager checkpoint afterwards would
-        # execute them a second time — probing the checkpointed frame
-        # makes each iteration run its joins exactly once, and because
-        # the pre-round label rides along as __old the probe is a pure
-        # filter scan, not a join against the previous frame.
-        new_ck = _materialize(new_labels)
-        probe = new_ck.filter(F.col("component") != F.col("__old"))
-        if checkpoint_dir is not None:
-            # Reliable mode: blocks are already materialized (eager),
-            # so the cheapest probe short-circuits at the first
-            # changed row.
-            changed = probe.limit(1).count()
-        else:
-            # Lazy-local mode (r13): the probe IS the materializing
-            # job — a full count guarantees every partition is
-            # computed and cached in this one job (a limit(1) would
-            # short-circuit, leaving partitions for a separate
-            # completion job and re-adding the barrier just removed).
-            changed = probe.count()
-        # The previous round's blocks are dead the moment new_ck is
-        # materialized — release them now, round by round.
-        if prev_ck is not None:
-            _release(prev_ck)
-        prev_ck = new_ck
-        if not changed:
-            # edges are dead too: the result is checkpoint-truncated.
-            _release(edges)
-            # The RESULT rides the final round's checkpoint blocks, so
-            # they cannot be released here. An eager caller that fully
-            # consumes the result within its own scope (streaming
-            # ingests: one sweep per micro-batch) passes
-            # ``final_ckpt_out`` and releases them deterministically
-            # afterwards (VERDICT r13 item 3) — batch callers leave
-            # them to the ContextCleaner as before.
-            if final_ckpt_out is not None:
-                final_ckpt_out.append(new_ck)
-            return new_ck.select("id", "component")
-        labels = new_ck.select("id", "component")
-    raise RuntimeError(
-        f"connected_components did not converge within {max_iter} iterations "
-        "(astronomically deep label chains); raise max_iter"
-    )
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
@@ -901,18 +827,7 @@ def simhash_candidates(
             )
         ).alias("band", "chunk"),
     )
-    w = Window.partitionBy("band", "chunk").orderBy(id_col)
-    bounded = banded.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= max_bucket
-    )
-    a = bounded.select("band", "chunk", F.col(id_col).alias("id_a"))
-    b = bounded.select("band", "chunk", F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return bucket_pairs(banded, id_col, ["band", "chunk"], max_bucket)
 
 
 #: 60-bit engine-portable shingle hash (md5 prefix), reduced mod the
@@ -968,7 +883,6 @@ def duplicate_spans(
     text_col: str,
     k: int = 8,
     min_docs: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Maximal cross-document duplicated token spans — the EXACT
     substring-dedup primitive of Lee et al., "Deduplicating Training
@@ -992,20 +906,18 @@ def duplicate_spans(
     operator's output is per-DOCUMENT spans, so its size is bounded by
     corpus token count regardless of how many docs share a span.
 
-    ``materialize=True`` (default) persists the slim (id, pos, hash)
-    row frame so the dup-set aggregate and the probe side share ONE
-    scan+explode+window instead of re-deriving the subtree twice (the
-    plan otherwise duplicates stages 1-7 under the aggregate — plan
-    reuse does not fire across the aggregate boundary). Pass False for
-    a pure-lazy plan when composing into a larger pipeline.
+    The slim (id, pos, hash) row frame is persisted through the open
+    :func:`~xlearning_spark.engine.intermediates` scope so the dup-set
+    aggregate and the probe side share ONE scan+explode+window instead
+    of re-deriving the subtree twice (the plan otherwise duplicates
+    stages 1-7 under the aggregate — plan reuse does not fire across
+    the aggregate boundary).
 
     Reference parity note: the reference (a YARN scheduler) has no
     dedup; this extends the mandated LLM-pipeline tier (SURVEY §2.12
     L2) beyond doc-level dedup to sub-document span dedup.
     """
-    rows = _span_position_rows(df, id_col, text_col, k)
-    if materialize:
-        rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    rows = scope().persist(_span_position_rows(df, id_col, text_col, k))
     starts = rows.filter(F.col("__h").isNotNull())
     dup = (
         starts.groupBy("__h")
@@ -1035,7 +947,6 @@ def excise_duplicate_spans(
     text_col: str,
     k: int = 8,
     min_docs: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Rewrite each document with its cross-corpus duplicated spans
     (see :func:`duplicate_spans`) REMOVED — the corpus-cleaning form
@@ -1055,13 +966,11 @@ def excise_duplicate_spans(
     the position range. Rebuild is a per-doc sort-agg on the same key.
     Same linear/keyed stage list as duplicate_spans plus zero
     additional shuffles (the flag join reuses the __h shuffle; the
-    window and rebuild reuse the id key). ``materialize`` as on
-    :func:`duplicate_spans` — here the persisted row frame is read
-    twice too (dup-set aggregate + the flagged probe side).
+    window and rebuild reuse the id key). The row frame is persisted as
+    in :func:`duplicate_spans`; here too it is read twice (dup-set
+    aggregate + the flagged probe side).
     """
-    rows = _span_position_rows(df, id_col, text_col, k)
-    if materialize:
-        rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    rows = scope().persist(_span_position_rows(df, id_col, text_col, k))
     starts = rows.filter(F.col("__h").isNotNull())
     dup = (
         starts.groupBy("__h")

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from xlearning_spark.engine import scope
+
 
 def list_input_files(df: DataFrame) -> DataFrame:
     """Distinct source files of a scan (S1/S5): alias-level file set."""
@@ -95,11 +97,10 @@ def _plan_node_names(df: DataFrame) -> list[str] | None:
 def probe_small_scan(df: DataFrame, min_partitions: int) -> bool | None:
     """True = the frame is a NARROW plan whose planned parallelism is
     below ``min_partitions`` (the local single-file-fixture case —
-    spreading and persisting derived frames is cheap and wins); False =
-    already wide enough, or contains a wide operator (the 100 TB case —
-    leave the plan alone and do NOT pin corpus-scale frames in
-    storage); None = the partition probe itself failed (caller chooses
-    the conservative action)."""
+    spreading it is cheap and wins); False = already wide enough, or
+    contains a wide operator (the 100 TB case — leave the plan alone);
+    None = the partition probe itself failed (caller chooses the
+    conservative action)."""
     names = _plan_node_names(df)
     if names is None or any(n not in _NARROW_NODES for n in names):
         return False
@@ -135,37 +136,15 @@ def spread_small_scan(df: DataFrame, min_partitions: int | None = None) -> DataF
     partition probe fails the frame is repartitioned unconditionally
     (always safe for correctness).
     """
-    spread, _ = spread_small_scan_ex(df, min_partitions)
-    return spread
-
-
-def spread_small_scan_ex(
-    df: DataFrame, min_partitions: int | None = None
-) -> tuple[DataFrame, bool]:
-    """:func:`spread_small_scan` plus the smallness verdict:
-    ``(frame, small)`` where ``small`` is True iff the input was a
-    narrow under-parallel scan (so the spread fired, or the probe
-    failed and the conservative spread was applied).
-
-    Operators use ``small`` to GATE intermediate persists (ADVICE r13):
-    sharing a computed frame across plan branches via
-    ``persist(MEMORY_AND_DISK)`` is the right call on a fixture-sized
-    input, but pinning a corpus-scale frame at 100 TB risks exhausting
-    executor storage — on a wide input they keep the pre-r13 lazy plan
-    instead."""
     spark = df.sparkSession
     if min_partitions is None:
         min_partitions = int(
             spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
-    small = probe_small_scan(df, min_partitions)
-    if small is None:
-        # Probe failure: spreading is always safe for correctness, and
-        # the input size is unknown — treat as small (pre-r14 behavior).
-        return df.repartition(min_partitions), True
-    if small:
-        return df.repartition(min_partitions), True
-    return df, False
+    # A failed probe (None) also spreads: always safe for correctness.
+    if probe_small_scan(df, min_partitions) is False:
+        return df
+    return df.repartition(min_partitions)
 
 
 def round_robin_assignment(files: list[str], n_workers: int) -> dict[int, list[str]]:
@@ -240,7 +219,11 @@ def epoch_replay(
     column; first pass materializes a cache so later epochs never
     re-read the source — the Spark translation of the reference's
     epoch-0 gzip tee (HboxContainer.java:1158-1199,
-    ``inputformatCache.gz``).
+    ``inputformatCache.gz``). The cache is registered with the open
+    :func:`~xlearning_spark.engine.intermediates` scope (``job.submit``
+    opens one per submit, so the tee dies with the job, as the
+    reference's dies with its container); with no scope open the
+    caller owns it.
 
     ``shuffle=True`` re-orders records independently per epoch — the
     reference's optional between-epoch stream shuffle
@@ -252,7 +235,7 @@ def epoch_replay(
     """
     if epochs < 1:
         raise ValueError("epochs must be >= 1")
-    base = df.persist(StorageLevel.DISK_ONLY) if cache else df
+    base = scope().persist(df, StorageLevel.DISK_ONLY) if cache else df
     out = None
     for e in range(epochs):
         tagged = base.withColumn("epoch", F.lit(e))

@@ -219,7 +219,7 @@ def portable_minhash_pairs(
     natural corpora, where every pair shares most of the vocabulary.
 
     Same distributed shape as the production path: map-side
-    signatures, one bucket-local shuffle join, verification
+    signatures, one bucket grouping into posting lists, verification
     proportional to candidate volume. Returns (id_a, id_b, jaccard)
     for candidates with shingle-set Jaccard >= threshold.
     """
@@ -228,17 +228,15 @@ def portable_minhash_pairs(
     coeffs = _minhash_coeffs(num_hashes)
     tok_hash = _SPARK_TOK_HASH.format(P=MINHASH_P)
 
-    from pyspark.storagelevel import StorageLevel
-
     from xlearning_spark.functions import tokens
-    from xlearning_spark.operators.sharding import spread_small_scan_ex
+    from xlearning_spark.operators.dedup import bucket_pairs
+    from xlearning_spark.operators.sharding import spread_small_scan
 
-    spread, small = spread_small_scan_ex(df)
     base = (
         # r13 (guide §2.5/§4): spread the single-file fixture scan so
         # the shingle/md5 map work parallelizes (no-op when the scan is
         # already wide — the 100 TB case; see spread_small_scan).
-        spread
+        spread_small_scan(df)
         .select(F.col(id_col).alias("id"), tokens(text_col).alias("__w"))
         .filter(F.size("__w") >= shingle_size)
         .select(
@@ -255,9 +253,7 @@ def portable_minhash_pairs(
     # the cold-cache protocol): caching the wide token/hash array rows
     # inside the timed run costs as much as the codegen recompute it
     # saves (paired persist/lazy medians 2.09 s vs 2.05 s), and at
-    # 100 TB a pinned copy risks executor disks (ADVICE r13). The slim
-    # BANDED rows below stay cached — that is where branch sharing
-    # pays (the q48 lesson).
+    # 100 TB a pinned copy risks executor disks (ADVICE r13).
     hashed = base.withColumn(
         "__ht", F.expr(f"transform(toks, t -> {tok_hash})")
     )
@@ -291,19 +287,9 @@ def portable_minhash_pairs(
             )
         ).alias("band", "key"),
     )
-    # The banded key rows feed BOTH self-join sides; without a
-    # materialization point each side re-derives the 48-hash signature
-    # project from `hashed` (r14 — the q48 lesson, gated the same way).
-    if small:
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    a = banded.select("band", "key", F.col("id").alias("id_a"))
-    b = banded.select("band", "key", F.col("id").alias("id_b"))
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    # Posting lists per (band, key), uncapped: the DuckDB replay keeps
+    # every bucket whole.
+    cand = bucket_pairs(banded, "id", ["band", "key"], None)
     ta = hashed.select(F.col("id").alias("id_a"), F.col("toks").alias("ta"))
     tb = hashed.select(F.col("id").alias("id_b"), F.col("toks").alias("tb"))
     jac = F.size(F.array_intersect("ta", "tb")) / F.size(F.array_union("ta", "tb"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from xlearning_spark.engine import intermediates, scope
 from xlearning_spark.functions import (
     fingerprint,
     punct_count,
@@ -611,7 +612,6 @@ def learn_bpe_merge_table(
     distributed round cost 0.3-1.0 s of job overhead on a vocabulary
     of 31 rows — 8-10 s of the q93 total — versus microseconds
     in-memory."""
-    from xlearning_spark.operators.dedup import release_checkpoint
     from xlearning_spark.operators.sharding import spread_small_scan
 
     words = (
@@ -643,78 +643,75 @@ def learn_bpe_merge_table(
     # instead of two (eager materialize + argmax). Because a lazy
     # checkpoint still READS its predecessor's blocks while
     # materializing, the superseded round's release is deferred until
-    # the argmax that consumed it has run (``pending_release``).
-    vocab = words.select(
-        F.concat(
-            F.filter(F.split("w", ""), lambda c: c != ""),
-            F.array(F.lit(end_of_word)),
-        ).alias("syms"),
-        "cnt",
-    ).localCheckpoint(eager=False)
-    live_ck = vocab
-    pending_release = None
-
-    merges: list[tuple[str, str, int]] = []
-    for i in range(n_merges):
-        pairs = (
-            vocab.filter(F.size("syms") >= 2)
-            .select(
-                F.slice("syms", 1, F.size("syms") - 1).alias("la"),
-                F.slice("syms", 2, F.size("syms") - 1).alias("ra"),
-                "cnt",
-            )
-            .select(F.explode(F.arrays_zip("la", "ra")).alias("p"), "cnt")
-            .groupBy(
-                F.col("p.la").alias("left"), F.col("p.ra").alias("right")
-            )
-            .agg(F.sum("cnt").alias("n"))
-        )
-        best = pairs.orderBy(F.desc("n"), "left", "right").limit(1).collect()
-        # The argmax just materialized the current vocab checkpoint —
-        # its predecessor's blocks are dead now (not one job earlier).
-        if pending_release is not None:
-            release_checkpoint(pending_release)
-            pending_release = None
-        if not best or best[0]["n"] < min_freq:
-            break
-        left, right = best[0]["left"], best[0]["right"]
-        merges.append((left, right, int(best[0]["n"])))
-        joined = left + right
-        # Greedy left-to-right fold: append each symbol, or fuse it
-        # with the accumulator tail when (tail, symbol) == the pair.
-        # The just-fused token can itself fuse again only as the LEFT
-        # of a later occurrence — matching the classic re-scan
-        # semantics ("aaaa" + (a,a) -> [aa, aa]).
-        vocab = vocab.select(
-            F.aggregate(
-                F.slice("syms", 2, F.greatest(F.size("syms") - 1, F.lit(0))),
-                F.slice("syms", 1, F.least(F.size("syms"), F.lit(1))),
-                lambda acc, x: F.when(
-                    (F.element_at(acc, -1) == F.lit(left)) & (x == F.lit(right)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(joined))
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
+    # the argmax that consumed it has run (``pending_release``). Only
+    # the merges list leaves the scope, so it frees the last rounds.
+    with intermediates():
+        vocab = words.select(
+            F.concat(
+                F.filter(F.split("w", ""), lambda c: c != ""),
+                F.array(F.lit(end_of_word)),
             ).alias("syms"),
             "cnt",
         )
-        if (i + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=False)
-            # The superseded round's vocab blocks die once the NEW
-            # checkpoint materializes — which happens inside the next
-            # round's argmax, so the release is deferred to just after
-            # that collect (same cleaner-lag discipline as
-            # connected_components, shifted one job later for the lazy
-            # checkpoint).
-            pending_release = live_ck
-            live_ck = vocab
-    # Only the merges list leaves this function: the last rounds'
-    # vocab blocks are dead too (unpersist on a never-materialized
-    # lazy checkpoint is a no-op).
-    release_checkpoint(live_ck)
-    if pending_release is not None:
-        release_checkpoint(pending_release)
-    return merges
+        vocab = scope().checkpoint(vocab, eager=False)
+        live_ck = vocab
+        pending_release = None
+
+        merges: list[tuple[str, str, int]] = []
+        for i in range(n_merges):
+            pairs = (
+                vocab.filter(F.size("syms") >= 2)
+                .select(
+                    F.slice("syms", 1, F.size("syms") - 1).alias("la"),
+                    F.slice("syms", 2, F.size("syms") - 1).alias("ra"),
+                    "cnt",
+                )
+                .select(F.explode(F.arrays_zip("la", "ra")).alias("p"), "cnt")
+                .groupBy(
+                    F.col("p.la").alias("left"), F.col("p.ra").alias("right")
+                )
+                .agg(F.sum("cnt").alias("n"))
+            )
+            best = pairs.orderBy(F.desc("n"), "left", "right").limit(1).collect()
+            # The argmax just materialized the current vocab checkpoint —
+            # its predecessor's blocks are dead now (not one job earlier).
+            if pending_release is not None:
+                scope().release(pending_release)
+                pending_release = None
+            if not best or best[0]["n"] < min_freq:
+                break
+            left, right = best[0]["left"], best[0]["right"]
+            merges.append((left, right, int(best[0]["n"])))
+            joined = left + right
+            # Greedy left-to-right fold: append each symbol, or fuse it
+            # with the accumulator tail when (tail, symbol) == the pair.
+            # The just-fused token can itself fuse again only as the LEFT
+            # of a later occurrence — matching the classic re-scan
+            # semantics ("aaaa" + (a,a) -> [aa, aa]).
+            vocab = vocab.select(
+                F.aggregate(
+                    F.slice("syms", 2, F.greatest(F.size("syms") - 1, F.lit(0))),
+                    F.slice("syms", 1, F.least(F.size("syms"), F.lit(1))),
+                    lambda acc, x: F.when(
+                        (F.element_at(acc, -1) == F.lit(left)) & (x == F.lit(right)),
+                        F.concat(
+                            F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(joined))
+                        ),
+                    ).otherwise(F.concat(acc, F.array(x))),
+                ).alias("syms"),
+                "cnt",
+            )
+            if (i + 1) % checkpoint_every == 0:
+                vocab = scope().checkpoint(vocab, eager=False)
+                # The superseded round's vocab blocks die once the NEW
+                # checkpoint materializes — which happens inside the next
+                # round's argmax, so the release is deferred to just after
+                # that collect (same cleaner-lag discipline as
+                # connected_components, shifted one job later for the lazy
+                # checkpoint).
+                pending_release = live_ck
+                live_ck = vocab
+        return merges
 
 
 def apply_bpe(
@@ -1049,28 +1046,24 @@ def train_text_lr(
     ``n_docs`` counts only docs with tokens (ADVICE r10).
     """
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
     spark = df.sparkSession
-    feats = (
-        hashed_bow(df, id_col, text_col, dim, portable)
-        .join(
-            df.select(id_col, F.col(label_col).cast("double").alias("__y")),
-            id_col,
-        )
-        .repartition(id_col)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_docs = feats.select(id_col).distinct().count()
-    if n_docs == 0:
-        feats.unpersist()
-        raise ValueError("train_text_lr: no documents with tokens")
-
     win = Window.partitionBy(id_col).orderBy("idx")
     full = win.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     w = [0.0] * dim
     b = 0.0
-    try:
+    with intermediates():
+        feats = scope().persist(
+            hashed_bow(df, id_col, text_col, dim, portable)
+            .join(
+                df.select(id_col, F.col(label_col).cast("double").alias("__y")),
+                id_col,
+            )
+            .repartition(id_col)
+        )
+        n_docs = feats.select(id_col).distinct().count()
+        if n_docs == 0:
+            raise ValueError("train_text_lr: no documents with tokens")
         for _ in range(iters):
             wdf = spark.createDataFrame(
                 list(enumerate(w)), "idx int, wt double"
@@ -1104,6 +1097,4 @@ def train_text_lr(
                 w[row["idx"]] -= lr * row["g"] / n_docs
             gb = sum(r["gb"] for r in grad_rows if r["gb"] is not None)
             b -= lr * gb / n_docs
-    finally:
-        feats.unpersist()
     return w, b

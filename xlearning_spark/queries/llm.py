@@ -504,7 +504,7 @@ def _q86_oracle() -> str:
     "(operators/sketch.portable_minhash_pairs — md5 5-gram-shingle "
     "hash, LCG-literal universal-hash coefficients, value-tuple band "
     "keys) is replayed verbatim in DuckDB, so the BANDING MACHINERY "
-    "itself — signatures, bucket join, candidate set, exact-Jaccard "
+    "itself — signatures, bucket posting lists, candidate set, exact-Jaccard "
     "verify — carries the oracle, not just a recall bound. 48 hashes "
     "x 12 bands (s-curve midpoint ~0.54), verify threshold 0.5 on "
     "shingle sets (q70 semantics).",

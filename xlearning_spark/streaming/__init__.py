@@ -41,7 +41,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from xlearning_spark.operators.dedup import release_checkpoint
+from xlearning_spark.engine import intermediates, scope
 
 #: Schema of the events stream (fixture parity; ts as micro timestamp).
 EVENTS_SCHEMA = StructType(
@@ -328,10 +328,18 @@ def _drain(
 ) -> None:
     """T5/T6: run ``fn(batch_df, batch_id)`` over every micro-batch
     currently available (foreachBatch, append mode, availableNow) and
-    wait for the drain to finish. ``query_name`` names the query so
+    wait for the drain to finish. Each call is one
+    :func:`~xlearning_spark.engine.intermediates` scope, so the frames a
+    batch caches die with the batch: a long stream never accumulates
+    one dead block set per batch. ``query_name`` names the query so
     other code can find it in ``spark.streams.active``."""
+
+    def scoped(batch_df: DataFrame, batch_id: int) -> None:
+        with intermediates():
+            fn(batch_df, batch_id)
+
     w = (
-        stream_df.writeStream.foreachBatch(fn)
+        stream_df.writeStream.foreachBatch(scoped)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -422,7 +430,6 @@ def incremental_partition_save(
         # in snapshot mode.
         merge = parts if key_cols is not None else parts & touched
         out = batch_df
-        carried: DataFrame | None = None
         if merge:
             existing = _read_state_parquet(batch_df.sparkSession, out_dir)
             if existing is not None:
@@ -452,20 +459,13 @@ def incremental_partition_save(
                 # Materialize the carried-over rows BEFORE the write:
                 # the sink overwrites the very files they come from, and
                 # Spark (rightly) refuses a lazy self-overwrite plan.
-                carried = old.localCheckpoint(eager=True)
-                out = batch_df.unionByName(carried)
+                out = batch_df.unionByName(scope().checkpoint(old, eager=True))
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
             .parquet(out_dir)
         )
-        if carried is not None:
-            # The carried-over blocks are dead once the write lands; on
-            # a long stream, leaving one block set per micro-batch to
-            # the async ContextCleaner accumulates exactly the full-GC
-            # debt the iterative operators release eagerly.
-            release_checkpoint(carried)
         touched.update(parts)
         written.append(batch_id)
 
@@ -603,83 +603,68 @@ def neardup_ingest(
         # One eager checkpoint of the deduped batch: AQE sizes it by its
         # real bytes (one partition for a small batch, many for a
         # backfill), and every branch below reads it in place.
-        batch = (
-            batch_df.select(id_col, text_col)
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)
+        batch = scope().checkpoint(
+            batch_df.select(id_col, text_col).dropDuplicates([id_col]), eager=True
         )
-        # Per-micro-batch cached frames, released after the write
-        # commits: a long-running stream must not accumulate one dead
-        # block set per batch.
-        batch_persists: list[DataFrame] = []
-        batch_ckpts: list[DataFrame] = [batch]
-        try:
-            # Bounded id collect: a batch over broadcast_batch_limit is
-            # a backfill whose ids stay distributed (Spark's limit is an
-            # int32).
-            ids = [
-                r[0]
-                for r in batch.select(id_col)
-                .limit(min(broadcast_batch_limit, 2**31 - 2) + 1)
-                .collect()
-            ]
-            if not ids:
+        # Bounded id collect: a batch over broadcast_batch_limit is
+        # a backfill whose ids stay distributed (Spark's limit is an
+        # int32).
+        ids = [
+            r[0]
+            for r in batch.select(id_col)
+            .limit(min(broadcast_batch_limit, 2**31 - 2) + 1)
+            .collect()
+        ]
+        if not ids:
+            return False
+        small = len(ids) <= broadcast_batch_limit
+        pool = _neardup_pool(spark, corpus_dir, batch, batch_id, id_col, text_col)
+        # Incremental pair generation: every candidate pair must
+        # touch the landed batch — the already-deduped corpus is
+        # never re-paired against itself (semantics-preserving for
+        # the corpus-precedence verdicts; see ngram_jaccard_pairs).
+        pairs = ngram_jaccard_pairs(
+            pool,
+            id_col,
+            text_col,
+            threshold=threshold,
+            shingle_size=shingle_size,
+            delta_ids=batch.select(id_col),
+            # Organic-skew knob passed through: boilerplate-heavy
+            # corpora demote hot shingles out of prefixes (lossless
+            # — see ngram_jaccard_pairs / SCALE.md organic-skew probe).
+            demote_hot_df=demote_hot_df,
+        ).select("id_a", "id_b")
+        sol = solve_components(pairs)
+        if small and isinstance(sol, DriverComponents):
+            losers = _driver_losers(sol, ids)
+            if len(losers) == len(ids):
                 return False
-            small = len(ids) <= broadcast_batch_limit
-            pool = _neardup_pool(spark, corpus_dir, batch, batch_id, id_col, text_col)
-            # Incremental pair generation: every candidate pair must
-            # touch the landed batch — the already-deduped corpus is
-            # never re-paired against itself (semantics-preserving for
-            # the corpus-precedence verdicts; see ngram_jaccard_pairs).
-            pairs = ngram_jaccard_pairs(
-                pool,
-                id_col,
-                text_col,
-                threshold=threshold,
-                shingle_size=shingle_size,
-                delta_ids=batch.select(id_col),
-                # Organic-skew knob passed through: boilerplate-heavy
-                # corpora demote hot shingles out of prefixes (lossless
-                # — see ngram_jaccard_pairs / SCALE.md organic-skew probe).
-                demote_hot_df=demote_hot_df,
-                persisted_out=batch_persists,
-            ).select("id_a", "id_b")
-            sol = solve_components(pairs, final_ckpt_out=batch_ckpts)
-            if small and isinstance(sol, DriverComponents):
-                losers = _driver_losers(sol, ids)
-                if len(losers) == len(ids):
-                    return False
-                # The write reads only the batch checkpoint, never
-                # corpus_dir, so it needs no materialization of its own.
-                survivors = batch
-                if losers:
-                    lost = spark.createDataFrame(
-                        spark.sparkContext.parallelize([(x,) for x in losers], 1),
-                        StructType([StructField("__loser", batch.schema[id_col].dataType)]),
-                    )
-                    # left_anti keeps a null id, which no loser matches.
-                    survivors = batch.join(
-                        F.broadcast(lost), batch[id_col] == lost["__loser"], "left_anti"
-                    )
-            else:
-                comps = sol.frame(spark) if isinstance(sol, DriverComponents) else sol
-                survivors = _distributed_survivors(
-                    batch, pool, comps, id_col, F.broadcast if small else (lambda d: d)
+            # The write reads only the batch checkpoint, never
+            # corpus_dir, so it needs no materialization of its own.
+            survivors = batch
+            if losers:
+                lost = spark.createDataFrame(
+                    spark.sparkContext.parallelize([(x,) for x in losers], 1),
+                    StructType([StructField("__loser", batch.schema[id_col].dataType)]),
                 )
-                # Materialize before writing: the verdict reads corpus_dir,
-                # which the write appends to, and a lazy plan would
-                # self-overlap.
-                survivors = survivors.localCheckpoint(eager=True)
-                batch_ckpts.append(survivors)
-                if survivors.isEmpty():
-                    return False
-            idempotent_batch_append(survivors, corpus_dir, batch_id)
-            return True
-        finally:
-            for frame in batch_persists:
-                frame.unpersist()
-            for ck in batch_ckpts:
-                release_checkpoint(ck)
+                # left_anti keeps a null id, which no loser matches.
+                survivors = batch.join(
+                    F.broadcast(lost), batch[id_col] == lost["__loser"], "left_anti"
+                )
+        else:
+            comps = sol.frame(spark) if isinstance(sol, DriverComponents) else sol
+            survivors = _distributed_survivors(
+                batch, pool, comps, id_col, F.broadcast if small else (lambda d: d)
+            )
+            # Materialize before writing: the verdict reads corpus_dir,
+            # which the write appends to, and a lazy plan would
+            # self-overlap.
+            survivors = scope().checkpoint(survivors, eager=True)
+            if survivors.isEmpty():
+                return False
+        idempotent_batch_append(survivors, corpus_dir, batch_id)
+        return True
 
     return _landing_ingest(
         stream_df, corpus_dir, checkpoint_dir, "neardup_ingest", land
@@ -870,19 +855,15 @@ def _append_frame(batch_frame, out_dir: str):
     """``land`` for :func:`_landing_ingest` when a batch's output is one
     frame, ``batch_frame(batch_df)``: checkpoint it eagerly (one
     execution feeds both the emptiness probe and the write), skip an
-    empty batch, append the rest idempotently by batch id, and release
-    the per-batch blocks eagerly (cleaner-lag discipline — a long
-    stream must not accumulate one dead block set per batch)."""
+    empty batch and append the rest idempotently by batch id. The
+    batch's scope (see :func:`_drain`) frees the checkpoint."""
 
     def land(batch_df: DataFrame, batch_id: int) -> bool:
-        out = batch_frame(batch_df).localCheckpoint(eager=True)
-        try:
-            if out.isEmpty():
-                return False
-            idempotent_batch_append(out, out_dir, batch_id)
-            return True
-        finally:
-            release_checkpoint(out)
+        out = scope().checkpoint(batch_frame(batch_df), eager=True)
+        if out.isEmpty():
+            return False
+        idempotent_batch_append(out, out_dir, batch_id)
+        return True
 
     return land
 
@@ -1138,9 +1119,7 @@ def _sketch_update(state_dir: str, checkpoint_dir: str | None, sketch, merge, pr
         # Materialize before writing: the merged plan reads the previous
         # version; eager checkpoint severs that scan from the write.
         vdir = f"{state_dir}/v{batch_id:010d}"
-        ck = regs.localCheckpoint(eager=True)
-        ck.write.mode("overwrite").parquet(vdir)
-        release_checkpoint(ck)  # per-batch blocks, dead after the write
+        scope().checkpoint(regs, eager=True).write.mode("overwrite").parquet(vdir)
         if checkpoint_dir is not None:
             _mark_sketch_version(spark, vdir, checkpoint_dir)
 
@@ -1380,8 +1359,6 @@ def excise_ingest(
 
     Returns the batch ids that landed at least one document.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from xlearning_spark.operators.dedup import (
         _span_position_rows,
         excise_from_flags,
@@ -1394,9 +1371,7 @@ def excise_ingest(
         batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
         if batch.isEmpty():
             return
-        rows = _span_position_rows(batch, id_col, text_col, k).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        rows = scope().persist(_span_position_rows(batch, id_col, text_col, k))
         starts = rows.filter(F.col("__h").isNotNull())
         batch_counts = starts.groupBy("__h").agg(
             F.countDistinct(id_col).alias("__nd")
@@ -1414,7 +1389,7 @@ def excise_ingest(
         else:
             scored = batch_counts.withColumn("__prior", F.lit(0))
         # Used twice (dup verdicts + registry delta): one pass, cached.
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
+        scored = scope().persist(scored)
         dup = scored.filter(
             F.col("__nd") + F.col("__prior") >= min_docs
         ).select("__h")
@@ -1425,27 +1400,22 @@ def excise_ingest(
         flagged = rows.join(dup_pos, [id_col, "pos"], "left").select(
             id_col, "pos", "tok", F.coalesce("__dup", F.lit(0)).alias("__dup")
         )
-        cleaned = excise_from_flags(
-            flagged, batch.select(F.col(id_col)), id_col, k
-        ).localCheckpoint(eager=True)
+        cleaned = scope().checkpoint(
+            excise_from_flags(flagged, batch.select(F.col(id_col)), id_col, k),
+            eager=True,
+        )
         # Registry delta: this batch's per-shingle distinct-doc counts,
         # dropped once the prior sum has saturated at min_docs.
         delta = scored.filter(F.col("__prior") < F.lit(min_docs)).select(
             "__h", "__nd"
         )
-        delta = delta.localCheckpoint(eager=True)
+        delta = scope().checkpoint(delta, eager=True)
         cleaned.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch={batch_id}")
         )
         delta.write.mode("overwrite").parquet(
             os.path.join(state_dir, f"batch={batch_id}")
         )
-        # Per-micro-batch checkpoint blocks are dead once both writes
-        # land — release eagerly (cleaner-lag discipline).
-        release_checkpoint(cleaned)
-        release_checkpoint(delta)
-        scored.unpersist()
-        rows.unpersist()
         processed.append(batch_id)
 
     # The lease completes any compaction swap a crash interrupted
