@@ -179,42 +179,51 @@ def test_ivf_recall_vs_brute_force(spark):
 
 def test_ivf_build_probe_split_reuses_one_fit(spark, monkeypatch):
     # r4 verdict item 3: the index must be build-once / probe-many.
-    # Build, then poison KMeans.fit — two subsequent probe batches must
-    # succeed (they never refit) and match the one-shot ivf_topk.
-    from pyspark.ml.clustering import KMeans
-
-    from xlearning_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe,
-        ivf_topk,
-    )
+    # Build, then poison the centroid trainer — two subsequent probe
+    # batches must succeed (they never retrain) and match the one-shot
+    # ivf_topk.
+    from xlearning_spark.operators import similarity as sim
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
-    index = build_ivf_index(emb, id_col="vec_id", n_cells=8)
+    index = sim.build_ivf_index(emb, id_col="vec_id", n_cells=8)
     assert index.cells.storageLevel.useMemory  # cached for reuse
     assert len(index.centroids) == 8
 
-    def boom(self, df):
-        raise AssertionError("probe must not refit KMeans")
+    def boom(*a, **kw):
+        raise AssertionError("probe must not retrain centroids")
 
-    monkeypatch.setattr(KMeans, "fit", boom)
+    monkeypatch.setattr(sim, "_lloyd", boom)
 
     for lo, hi in ((0, 5), (5, 10)):
         q = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         got = {
             (r.qid, r.cid)
-            for r in ivf_probe(index, q, id_col="vec_id", k=5, n_probe=4).collect()
+            for r in sim.ivf_probe(index, q, id_col="vec_id", k=5, n_probe=4).collect()
         }
         monkeypatch.undo()
         want = {
             (r.qid, r.cid)
-            for r in ivf_topk(
+            for r in sim.ivf_topk(
                 emb, q, id_col="vec_id", k=5, n_cells=8, n_probe=4
             ).collect()
         }
-        monkeypatch.setattr(KMeans, "fit", boom)
+        monkeypatch.setattr(sim, "_lloyd", boom)
         assert got == want, f"probe batch [{lo},{hi}) diverged from one-shot"
     index.unpersist()
+
+
+def test_ivf_build_is_partition_invariant(spark):
+    # The training sample is hash-ordered and the cell assignment is a
+    # pure map, so the index does not depend on how the corpus is split.
+    from xlearning_spark.operators.similarity import build_ivf_index
+
+    emb = read_table(spark, SF_SMOKE, "embeddings")
+    one = build_ivf_index(emb.coalesce(1), id_col="vec_id", n_cells=8, cache=False)
+    four = build_ivf_index(emb.repartition(4), id_col="vec_id", n_cells=8, cache=False)
+    assert one.centroids == four.centroids
+    cells_one = sorted((r.cid, r.cell) for r in one.cells.collect())
+    cells_four = sorted((r.cid, r.cell) for r in four.cells.collect())
+    assert cells_one == cells_four and len(cells_one) == emb.count()
 
 
 def test_exclude_self_flag(spark):
@@ -1093,9 +1102,7 @@ def test_ann_recall_monotone_and_exhaustive(spark):
 def test_ivf_index_round_trips_through_storage(spark, tmp_path, monkeypatch):
     # Persistence parity with the PQ index: a saved IVF index reloads
     # with identical centroids and cells and probes identically, with
-    # KMeans poisoned after save (no refit on load).
-    from pyspark.ml.clustering import KMeans
-
+    # the centroid trainer poisoned after save (no retraining on load).
     from xlearning_spark.operators import similarity as sim
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
@@ -1108,10 +1115,10 @@ def test_ivf_index_round_trips_through_storage(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "ivf_index")
     sim.save_ivf_index(built, path)
 
-    def boom(self, *a, **kw):
-        raise AssertionError("load must not refit KMeans")
+    def boom(*a, **kw):
+        raise AssertionError("load must not retrain centroids")
 
-    monkeypatch.setattr(KMeans, "fit", boom)
+    monkeypatch.setattr(sim, "_lloyd", boom)
     loaded = sim.load_ivf_index(spark, path)
     assert loaded.centroids == built.centroids
     got = {
@@ -1281,6 +1288,23 @@ def test_minhash_pipelines_leave_no_cached_frames(spark, tmp_path):
         before = set(jsc.getPersistentRDDs().keySet().toArray())
         pipeline(df, "doc_id", "text").count()
         assert set(jsc.getPersistentRDDs().keySet().toArray()) == before, pipeline
+
+
+@pytest.mark.parametrize(
+    "oneshot", ["ivf_topk", "pq_topk_oneshot", "ivf_pq_topk", "ivf_sq8_topk"]
+)
+def test_ann_oneshots_leave_no_cached_frames(spark, oneshot):
+    # A one-shot build+probe returns only the result frame, so it must
+    # cache nothing: after an action the session's persistent-RDD set
+    # is unchanged.
+    from xlearning_spark.operators import similarity as sim
+
+    emb = read_table(spark, SF_SMOKE, "embeddings")
+    q = emb.filter(F.col("vec_id") < 5)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert getattr(sim, oneshot)(emb, q, id_col="vec_id", k=5).count() == 25
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
 
 
 def test_sq8_recall_and_code_invariance(spark):
@@ -1523,7 +1547,7 @@ def test_train_text_lr_learns_and_matches_numpy(spark):
 def test_assign_cells_matches_numpy_argmin_with_ties(spark):
     # The streamed-add geometry (similarity.assign_cells) must equal an
     # independent NumPy argmin — including exact ties, which must break
-    # to the LOWEST cell id (KMeans.transform's first-minimum choice):
+    # to the LOWEST cell id (the first minimum, as numpy's argmin):
     # centroids 2 and 5 are byte-identical duplicates, so every vector
     # nearest to them ties and must land in cell 2, never 5.
     import numpy as np

@@ -2327,8 +2327,9 @@ def test_ann_ingest_extends_index_and_matches_batch(spark, tmp_path):
     os.makedirs(src)
 
     index = build_ivf_index(part_a, n_cells=8, seed=11)
-    # The add path's geometry must match the build's own KMeans
-    # assignment on the same centroids (ties break to first minimum).
+    # The build assigns its cells with the same assign_cells the add
+    # path runs, so this pins that the two stay one geometry (ties to
+    # the first minimum) should either ever change.
     rebuilt = {
         (r.cid, r.cell)
         for r in assign_cells(part_a, index.centroids).collect()

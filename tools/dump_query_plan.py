@@ -4,11 +4,19 @@ Usage: SPARK_GRAFT_PLANS_ROUND=ROUND python tools/dump_query_plan.py OUT_SUFFIX 
 Writes plans/<ROUND>/<query>_<OUT_SUFFIX>.txt for each query at sf0.1
 (SPARK_GRAFT_SF_DIR overrides the scale directory). ROUND is required,
 so a run never overwrites an earlier round's record by default.
+
+Exchange ids are written as ``[plan_id=#]``: the JVM numbers them by the
+physical plans it built before, the eager work inside a query callable
+included, so a byte compare of two dumps compares the plan trees only.
+Attribute ids (``#N``) and lambda names count every expression the JVM
+built before as well: to compare two versions, dump each query in its
+own process.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -34,6 +42,7 @@ def main() -> int:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+        plan = re.sub(r"\[plan_id=\d+\]", "[plan_id=#]", plan)
         out_dir = os.path.join(REPO, "plans", plans_round)
         os.makedirs(out_dir, exist_ok=True)
         out = os.path.join(out_dir, f"{name}_{suffix}.txt")

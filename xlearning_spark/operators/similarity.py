@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (SURVEY.md §2.12 L3).
 
-Two tiers:
+Six tiers:
   - ``brute_force_topk``: exact cosine top-k via broadcast of the query
     set. Scales linearly in corpus size (the 100 TB-safe exact path
     when |queries| is small — the corpus is scanned once, no shuffle
@@ -8,6 +8,24 @@ Two tiers:
   - ``lsh_topk``: random-hyperplane LSH — signature map-side, bucket
     join on band keys, exact re-rank inside buckets. Sublinear
     candidate volume; recall tested against brute force in tests/.
+  - IVF (``build_ivf_index`` / ``ivf_probe``, one-shot ``ivf_topk``):
+    coarse cells; a query scans only its ``n_probe`` nearest cells.
+  - PQ (``build_pq_index`` / ``pq_topk``, one-shot ``pq_topk_oneshot``):
+    per-subspace codes scored by asymmetric distance, exact re-rank of
+    the ADC shortlist.
+  - SQ8 (``build_sq8_index`` / ``sq8_topk``): int8 per-dimension codes
+    scored by dequantized cosine, exact re-rank of the shortlist.
+  - IVF x PQ and IVF x SQ8 (``ivf_pq_topk`` / ``ivf_sq8_topk``): the
+    IVF probe bounds which codes the PQ or SQ8 scan scores.
+
+Every index TRAINS the same way: one bounded, hash-ordered corpus
+sample (:func:`_train_sample`) fit by the in-memory Lloyd's
+(:func:`_lloyd`) — IVF centroids and PQ codebooks alike (SQ8 needs
+only per-dimension bounds). Every tier RANKS the same way: its own
+candidate frame and approximate score, then the shared stages — the
+centroid probe (:func:`_probe_cells`), the approximate-score
+shortlist (:func:`_shortlist`) and the exact-cosine top-k
+(:func:`_top_k`).
 
 Dot products run as JVM higher-order functions (zip_with + aggregate)
 in whole-stage codegen — no Python in the hot path.
@@ -18,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xlearning_spark.operators.dedup import bucket_pairs
 from xlearning_spark.operators.sharding import spread_small_scan
 
 # r13 (guide §2.5): every corpus-side entry point below spreads a
@@ -28,6 +47,10 @@ from xlearning_spark.operators.sharding import spread_small_scan
 # plan-level no-op when the scan is already at least session-parallel
 # (the 100 TB case), so no extra exchange is paid at scale. Query-side
 # frames stay untouched (bounded by contract, usually broadcast).
+
+#: Bound on the corpus sample an IVF or PQ index trains on — the one
+#: driver-side collect of a build, so the build stays 100 TB-safe.
+TRAIN_SAMPLE = 16384
 
 
 def _dot(a, b):
@@ -44,10 +67,81 @@ def _norm(a):
     )
 
 
+def _sqdist(a, b):
+    """Squared euclidean distance, folded in index order."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _cosine(a: str, b: str):
+    return _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
+
+
 def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
     """Adds cosine similarity between two array<double> columns."""
-    return df.withColumn(
-        out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
+    return df.withColumn(out, _cosine(a, b))
+
+
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, ids: str = "cid", vecs: str = "cv"
+) -> DataFrame:
+    """``(ids, vecs)`` rows: the id and the vector as array<double>."""
+    return df.select(
+        F.col(id_col).alias(ids),
+        F.col(vec_col).cast("array<double>").alias(vecs),
+    )
+
+
+# ------------------------------------------------------------ ranking
+# The shared tail of every tier. Candidate frames carry ``qid`` and
+# ``cid``; ranks tie-break on ``cid``, so every result is deterministic.
+
+
+def _centroid_table(spark, centroids: list[list[float]]) -> DataFrame:
+    """The ``(cell, centroid)`` rows :func:`_probe_cells` ranks."""
+    return spark.createDataFrame(
+        [(i, c) for i, c in enumerate(centroids)], ["cell", "centroid"]
+    )
+
+
+def _probe_cells(q: DataFrame, cent_df: DataFrame, n_probe: int) -> DataFrame:
+    """The ``n_probe`` cells nearest each query: one row per
+    ``(query, probed cell)`` — ``q``'s columns plus ``cell``. Queries
+    rank the broadcast :func:`_centroid_table` by squared distance,
+    ties to the lower cell id. Callers build that table before ``q``,
+    which keeps the attribute numbering of the recorded plans."""
+    wq = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cell"))
+    return (
+        q.crossJoin(F.broadcast(cent_df))
+        .withColumn("d2", _sqdist("qv", "centroid"))
+        .withColumn("pr", F.row_number().over(wq))
+        .filter(F.col("pr") <= n_probe)
+        .select(*q.columns, "cell")
+    )
+
+
+def _shortlist(cand: DataFrame, order, n: int) -> DataFrame:
+    """Each query's ``n`` best candidates by the approximate-score
+    ordering ``order`` — the cut an exact re-rank then covers."""
+    w = Window.partitionBy("qid").orderBy(order, F.col("cid"))
+    return (
+        cand.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+        .drop("rn")
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The exact-cosine tail: each query's ``k`` best rows by
+    ``cosine`` desc, as ``(qid, cid, cosine)``."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("qid", "cid", "cosine")
     )
 
 
@@ -69,25 +163,10 @@ def brute_force_topk(
     querying a corpus against itself); set False for unrelated id
     spaces, where an accidental id collision must not drop a match.
     """
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c = spread_small_scan(corpus).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
+    q = _vectors(queries, id_col, vec_col, "qid", "qv")
+    c = _vectors(spread_small_scan(corpus), id_col, vec_col)
     cond = F.col("qid") != F.col("cid") if exclude_self else F.lit(True)
-    scored = (
-        c.join(F.broadcast(q), cond)
-        .withColumn("cosine", _dot(F.col("qv"), F.col("cv")) / (_norm("qv") * _norm("cv")))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    return _top_k(with_cosine(c.join(F.broadcast(q), cond), "qv", "cv"), k)
 
 
 def cosine_neardup_pairs(
@@ -136,6 +215,35 @@ def cosine_neardup_pairs(
     )
 
 
+def _hyperplane_bands(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    ids: str,
+    dim: int,
+    num_planes: int,
+    bands: int,
+) -> DataFrame:
+    """``(ids, band, chunk)`` rows: each vector's hyperplane signature
+    cut into ``bands`` chunks of ``num_planes / bands`` bits — the
+    bucket keys of both hyperplane-LSH operators. IDs and keys only:
+    the vectors do not ride the bucket stage."""
+    width = num_planes // bands
+    mask = (1 << width) - 1
+    s = hyperplane_signature(df, vec_col, dim, num_planes)
+    return s.select(
+        F.col(id_col).alias(ids),
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftrightunsigned("sig", b * width).bitwiseAND(F.lit(mask))
+                    for b in range(bands)
+                ]
+            )
+        ).alias("band", "chunk"),
+    )
+
+
 def cosine_neardup_pairs_lsh(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -152,9 +260,11 @@ def cosine_neardup_pairs_lsh(
     Pipeline (same 100 TB discipline as the MinHash dedup):
       1. hyperplane signature map-side (deterministic planes, no
          shuffle);
-      2. band explode + bucket join — candidates are bucket-local,
-         never all-pairs; ``max_bucket`` row_number-caps degenerate
-         buckets (e.g. many zero vectors share a signature);
+      2. band explode + per-bucket posting lists
+         (:func:`~xlearning_spark.operators.dedup.bucket_pairs`) —
+         candidates are bucket-local, never all-pairs; ``max_bucket``
+         keeps only the lowest ids of a degenerate bucket (e.g. many
+         zero vectors share a signature);
       3. exact cosine verify on the candidate pairs only, with norms
          computed once per row before the pair join.
 
@@ -165,44 +275,12 @@ def cosine_neardup_pairs_lsh(
     there). Returns (id_a, id_b, cosine) with id_a < id_b and
     cosine >= threshold.
     """
-    width = num_planes // bands
-    mask = (1 << width) - 1
-    e = spread_small_scan(df).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    s = hyperplane_signature(e, "v", dim, num_planes)
-    banded = s.select(
-        "id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("sig", b * width).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "chunk"),
-    )
-    wcap = Window.partitionBy("band", "chunk").orderBy("id")
-    bounded = banded.withColumn("__rn", F.row_number().over(wcap)).filter(
-        F.col("__rn") <= max_bucket
-    )
-    # NOT persisted (r14, measured): unlike the MinHash banding (q48,
-    # where caching the bucket rows dedupes a 64-aggregate signature
-    # project and won ~5%), the hyperplane signature is ONE nested
-    # fold — a paired A/B read persist 3.38 s vs lazy 3.30 s (median
-    # of 4, same session), so the cache traffic buys nothing here.
-    a = bounded.select("band", "chunk", F.col("id").alias("id_a"))
-    b = bounded.select("band", "chunk", F.col("id").alias("id_b"))
-    cand = (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    src = spread_small_scan(df)
+    banded = _hyperplane_bands(src, id_col, vec_col, "id", dim, num_planes, bands)
+    cand = bucket_pairs(banded, "id", ["band", "chunk"], max_bucket)
     # Verify stage: join vectors+norms back onto the (small) candidate
     # set — norm work stays O(n), dot products O(candidates).
-    en = e.withColumn("nrm", _norm(F.col("v")))
+    en = _vectors(src, id_col, vec_col, "id", "v").withColumn("nrm", _norm(F.col("v")))
     pa = cand.join(
         en.select(
             F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
@@ -298,15 +376,67 @@ def hyperplane_signature(
     return df.withColumn("sig", guarded)
 
 
+# ------------------------------------------------------------ training
+
+
+def _train_sample(vectors: DataFrame) -> list:
+    """The training sample of a ``(cid, cv)`` frame: up to
+    :data:`TRAIN_SAMPLE` vectors in ``xxhash64(cid)`` order — one
+    deterministic collect, the same rows under any partitioning."""
+    sample = [
+        r["cv"]
+        for r in vectors.select("cv", F.xxhash64(F.col("cid").cast("string")).alias("__o"))
+        .orderBy("__o")
+        .limit(TRAIN_SAMPLE)
+        .collect()
+    ]
+    if not sample:
+        raise ValueError("cannot train an index on an empty corpus")
+    return sample
+
+
+def _lloyd(points, k: int, seed: int, iters: int = 10):
+    """Deterministic in-memory Lloyd's k-means over an (n, d) array —
+    the IVF centroid and PQ codebook trainer. Seeded init (distinct
+    sample points); empty clusters keep their previous centroid. numpy,
+    milliseconds at sample sizes; returns a (k, d) centroid array. The
+    distance table is built in row blocks of about 4M elements, so the
+    transient stays bounded at any n * k * d."""
+    import numpy as np
+
+    pts = np.asarray(points, dtype=np.float64)
+    rng = np.random.default_rng(seed)
+    init = rng.choice(len(pts), size=min(k, len(pts)), replace=False)
+    cent = pts[init]
+    if len(cent) < k:  # fewer points than centroids: pad with repeats
+        cent = np.vstack([cent, pts[rng.choice(len(pts), k - len(cent))]])
+    step = max(1, (1 << 22) // (k * pts.shape[1]))
+    for _ in range(iters):
+        assign = np.concatenate([
+            ((pts[s : s + step, None, :] - cent[None, :, :]) ** 2)
+            .sum(axis=2)
+            .argmin(axis=1)
+            for s in range(0, len(pts), step)
+        ])
+        for c in range(k):
+            sel = pts[assign == c]
+            if len(sel):
+                cent[c] = sel.mean(axis=0)
+    return cent
+
+
+# ------------------------------------------------------------ IVF
+
+
 class IvfIndex:
     """A built IVF index: cell-assigned corpus + centroid table.
 
     ``cells`` is the inverted file — ``(cid, cv, cell)`` rows, cached
     (or persisted anywhere) and reused by every :func:`ivf_probe` call;
     ``centroids`` is the bounded ``n_cells``-row probe table. At 100 TB
-    the build is the one expensive pass (KMeans + one map-side cell
-    assignment); probes are marginal-cost — they never touch KMeans
-    again and never rescan un-probed cells.
+    the build is one bounded sample collect plus one map-side cell
+    assignment; probes are marginal-cost — they never retrain and never
+    rescan un-probed cells.
     """
 
     def __init__(self, cells: DataFrame, centroids: list[list[float]]):
@@ -325,45 +455,21 @@ def build_ivf_index(
     seed: int = 42,
     cache: bool = True,
 ) -> IvfIndex:
-    """Index-build half of the IVF split: KMeans learns ``n_cells``
-    centroids (spark.ml, distributed), every corpus vector is assigned
-    to its nearest cell once (map-side after centroid broadcast), and
-    the resulting inverted file is cached for reuse across probe
-    batches — build once, probe many (r4 verdict item: the reuse must
-    be API-visible, not refit per query batch).
-
-    Coarse quantization only needs rough centroids: 8 iterations is
-    ample for cell assignment (recall is governed by n_probe, not
-    centroid polish).
+    """Index-build half of the IVF split: Lloyd's learns ``n_cells``
+    centroids on the bounded training sample (:func:`_train_sample`,
+    the one PQ trains on), every corpus vector is assigned to its
+    nearest cell once (:func:`assign_cells`, map-side against the
+    centroid literals), and the resulting inverted file is cached for
+    reuse across probe batches — build once, probe many (r4 verdict
+    item: the reuse must be API-visible, not refit per query batch).
+    The sample is hash-ordered and the assignment a pure map, so the
+    index is the same under any partitioning of the corpus.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sel = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    # The KMeans TRAINING input is deliberately NOT spread (r14,
-    # VERDICT r13 item 1): spark.ml caches the instance RDD internally
-    # and every one of the ~8 iterations (plus k-means|| init rounds)
-    # schedules one task per partition — round-robin-spreading a small
-    # fixture input to session parallelism multiplied that per-
-    # iteration scheduling overhead ~32x and read as a 1.8x regression
-    # on q52 (driver r13: 4.45 s vs 2.58 s in r12). At 100 TB the scan
-    # is already wide and the fit parallelizes by itself. The map-side
-    # cell ASSIGNMENT below (one pass, no iterations) keeps the spread
-    # — that is where single-partition serialization hurt (q114's
-    # encode shows the spread winning on the one-pass side).
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=8, featuresCol="features", predictionCol="cell"
-    )
-    model = km.fit(sel.withColumn("features", array_to_vector("cv")))
-    cells = model.transform(
-        spread_small_scan(sel).withColumn("features", array_to_vector("cv"))
-    ).select("cid", "cv", "cell")
+    sample = _train_sample(_vectors(corpus, id_col, vec_col))
+    centroids = [list(map(float, c)) for c in _lloyd(sample, n_cells, seed)]
+    cells = assign_cells(spread_small_scan(corpus), centroids, id_col, vec_col)
     if cache:
         cells = cells.persist()
-    centroids = [list(map(float, ct)) for ct in model.clusterCenters()]
     return IvfIndex(cells, centroids)
 
 
@@ -385,12 +491,11 @@ def assign_cells(
     device, q100), each vector computes its n_cells squared distances
     with codegen'd zip_with/aggregate folds, and the argmin is
     ``array_min`` over ``struct(d2, cell)`` — struct ordering compares
-    d2 first, then cell, so ties break to the lowest cell id exactly
-    like KMeans.transform's first-minimum choice. One pass over the
-    new vectors regardless of corpus size; nothing is joined, nothing
-    is exchanged (a window/crossJoin formulation was measured and
-    rejected: it shuffles the batch x n_cells expansion on the vector
-    id for no semantic gain).
+    d2 first, then cell, so ties break to the lowest cell id (the
+    first minimum). One pass over the new vectors regardless of corpus
+    size; nothing is joined, nothing is exchanged (a window/crossJoin
+    formulation was measured and rejected: it shuffles the batch x
+    n_cells expansion on the vector id for no semantic gain).
 
     A vector whose length differs from the centroid dimension raises
     (``raise_error`` guard) instead of being silently assigned: with
@@ -404,10 +509,7 @@ def assign_cells(
     spreads its OWN input upstream (q123 does).
     """
     dim = len(centroids[0])
-    out = df.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn(
+    out = _vectors(df, id_col, vec_col).withColumn(
         "cv",
         F.when(F.size("cv") == dim, F.col("cv")).otherwise(
             F.raise_error(
@@ -424,12 +526,7 @@ def assign_cells(
     d2s = []
     for i, c in enumerate(centroids):
         cent = F.array(*[F.lit(float(x)) for x in c])
-        d2 = F.aggregate(
-            F.zip_with("cv", cent, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        d2s.append(F.struct(d2.alias("d2"), F.lit(i).alias("cell")))
+        d2s.append(F.struct(_sqdist("cv", cent).alias("d2"), F.lit(i).alias("cell")))
     return out.withColumn(
         "cell", F.array_min(F.array(*d2s))["cell"]
     ).select("cid", "cv", "cell")
@@ -448,41 +545,14 @@ def ivf_probe(
     centroids, scans only its ``n_probe`` nearest cells, and re-ranks
     candidates by exact cosine — candidate volume is
     ~corpus * n_probe / n_cells instead of the full corpus. Touches
-    nothing but the prebuilt (cached) inverted file; no KMeans fit.
+    nothing but the prebuilt (cached) inverted file; no retraining.
     """
-    cent_df = queries.sparkSession.createDataFrame(
-        [(i, c) for i, c in enumerate(index.centroids)], ["cell", "centroid"]
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    dist2 = F.aggregate(
-        F.zip_with("qv", "centroid", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", dist2)
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probe)
-        .select("qid", "qv", "cell")
-    )
-
-    cand = index.cells.join(F.broadcast(probes), "cell")
+    cent_df = _centroid_table(queries.sparkSession, index.centroids)
+    q = _vectors(queries, id_col, vec_col, "qid", "qv")
+    cand = index.cells.join(F.broadcast(_probe_cells(q, cent_df, n_probe)), "cell")
     if exclude_self:
         cand = cand.filter(F.col("qid") != F.col("cid"))
-    scored = cand.withColumn(
-        "cosine", _dot(F.col("qv"), F.col("cv")) / (_norm("qv") * _norm("cv"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    return _top_k(with_cosine(cand, "qv", "cv"), k)
 
 
 def ivf_topk(
@@ -534,30 +604,15 @@ def lsh_topk(
     bucket-local, so the join stays sparse at corpus scale.
     ``exclude_self`` as in :func:`brute_force_topk`.
     """
-    width = num_planes // bands
-    mask = (1 << width) - 1
-
-    def banded(df: DataFrame, prefix: str) -> DataFrame:
-        # IDs + band keys only: the vectors do NOT ride the bucket
-        # join (r14, guide §2.3 shuffle-keys-not-payloads — the
-        # previous form carried both 64-dim arrays through the
-        # candidate dedup as grouping KEYS: Exchange
-        # hashpartitioning(qid, qv, cid, cv) in q50's before-plan).
-        s = hyperplane_signature(df, vec_col, dim, num_planes)
-        return s.select(
-            F.col(id_col).alias(f"{prefix}id"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned("sig", b * width).bitwiseAND(F.lit(mask))
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band", "chunk"),
-        )
-
-    qb = banded(queries, "q")
-    cb = banded(spread_small_scan(corpus), "c")
+    # IDs + band keys only: the vectors do NOT ride the bucket join
+    # (r14, guide §2.3 shuffle-keys-not-payloads — the previous form
+    # carried both 64-dim arrays through the candidate dedup as
+    # grouping KEYS: Exchange hashpartitioning(qid, qv, cid, cv) in
+    # q50's before-plan).
+    qb = _hyperplane_bands(queries, id_col, vec_col, "qid", dim, num_planes, bands)
+    cb = _hyperplane_bands(
+        spread_small_scan(corpus), id_col, vec_col, "cid", dim, num_planes, bands
+    )
     cand = cb.join(F.broadcast(qb), ["band", "chunk"])
     if exclude_self:
         cand = cand.filter(F.col("qid") != F.col("cid"))
@@ -567,27 +622,13 @@ def lsh_topk(
     # verify-stage equi join cosine_neardup_pairs_lsh uses. Same rows,
     # same cosines (q50's oracle hash certifies it).
     cand = cand.select("qid", "cid").distinct()
-    qvec = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    scored = (
-        cand.join(F.broadcast(qvec), "qid")
-        .join(cvec, "cid")
-        .withColumn(
-            "cosine", _dot(F.col("qv"), F.col("cv")) / (_norm("qv") * _norm("cv"))
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    qvec = _vectors(queries, id_col, vec_col, "qid", "qv")
+    cvec = _vectors(corpus, id_col, vec_col)
+    scored = cand.join(F.broadcast(qvec), "qid").join(cvec, "cid")
+    return _top_k(with_cosine(scored, "qv", "cv"), k)
+
+
+# ------------------------------------------------------------ PQ
 
 
 class PqIndex:
@@ -686,29 +727,6 @@ def _pq_tabs_sql(codebooks: list[list[list[float]]], vec: str, dsub: int) -> str
     )
 
 
-def _lloyd(points, k: int, seed: int, iters: int = 10):
-    """Deterministic in-memory Lloyd's k-means over an (n, d) array —
-    the PQ codebook trainer. Seeded init (distinct sample points);
-    empty clusters keep their previous centroid. numpy, milliseconds
-    at sample sizes; returns a (k, d) centroid array."""
-    import numpy as np
-
-    pts = np.asarray(points, dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    init = rng.choice(len(pts), size=min(k, len(pts)), replace=False)
-    cent = pts[init]
-    if len(cent) < k:  # fewer points than centroids: pad with repeats
-        cent = np.vstack([cent, pts[rng.choice(len(pts), k - len(cent))]])
-    for _ in range(iters):
-        d2 = ((pts[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(k):
-            sel = pts[assign == c]
-            if len(sel):
-                cent[c] = sel.mean(axis=0)
-    return cent
-
-
 def build_pq_index(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -717,7 +735,6 @@ def build_pq_index(
     bits: int = 4,
     seed: int = 42,
     cache: bool = True,
-    train_sample: int = 16384,
 ) -> PqIndex:
     """Build half of the product-quantization ANN split (Jégou et al.,
     "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
@@ -727,13 +744,13 @@ def build_pq_index(
     structs, deterministic tie-break on id, all codegen.
 
     Codebook training follows the standard PQ practice (FAISS trains
-    on a bounded sample): ONE deterministic hash-ordered sample of
-    ``train_sample`` vectors is collected and all m codebooks are fit
-    in-memory with seeded Lloyd's — milliseconds, versus one
-    distributed KMeans JOB per subspace whose per-fit scheduling
-    overhead dominated at any size (measured 8 x ~2 s for 2000
-    vectors). The sample bound makes the collect 100 TB-safe; encode
-    and scan stay fully distributed.
+    on a bounded sample): ONE deterministic hash-ordered sample
+    (:func:`_train_sample`, the one IVF trains on) is collected and
+    all m codebooks are fit in-memory with seeded Lloyd's —
+    milliseconds, versus one distributed KMeans JOB per subspace whose
+    per-fit scheduling overhead dominated at any size (measured 8 x
+    ~2 s for 2000 vectors). The sample bound makes the collect
+    100 TB-safe; encode and scan stay fully distributed.
 
     Build once, probe many (the IVF discipline): the sample+train is
     the only driver-side pass; :func:`pq_topk` touches nothing but the
@@ -748,22 +765,11 @@ def build_pq_index(
     # plan-construction/codegen, not data volume — the spread's extra
     # exchange read as a ~5% regression on the fixture with no
     # scale-side benefit (the scan is already wide at scale).
-    base = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
+    base = _vectors(corpus, id_col, vec_col)
     if cache:
         # The sample and the encode both read this frame.
         base = base.persist()
-    sample = [
-        r["cv"]
-        for r in base.select("cv", F.xxhash64(F.col("cid").cast("string")).alias("__o"))
-        .orderBy("__o")
-        .limit(train_sample)
-        .collect()
-    ]
-    if not sample:
-        raise ValueError("build_pq_index: empty corpus")
+    sample = _train_sample(base)
     # Dimension read off the sample just collected — the separate
     # corpus.first() probe was a whole extra Spark job per build (r13).
     d = len(sample[0])
@@ -799,6 +805,29 @@ def build_pq_index(
     return PqIndex(codes, codebooks, base=base if cache else None)
 
 
+def _pq_queries(
+    index: PqIndex, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """``(qid, qv, tabs)``: each query with its ADC distance tables."""
+    q = _vectors(queries, id_col, vec_col, "qid", "qv")
+    return q.withColumn("tabs", F.expr(_pq_tabs_sql(index.codebooks, "qv", index.dsub)))
+
+
+def _pq_rank(cand: DataFrame, m: int, k: int, shortlist: int) -> DataFrame:
+    """PQ scoring of a ``(qid, qv, tabs, cid, cv, codes)`` candidate frame:
+    the ADC distance is m table lookups, the ``shortlist`` smallest per
+    query are re-ranked by exact cosine."""
+    adc = F.expr(
+        " + ".join(
+            f"element_at(element_at(tabs, {j + 1}),"
+            f" element_at(codes, {j + 1}) + 1)"
+            for j in range(m)
+        )
+    )
+    short = _shortlist(cand.withColumn("adc", adc), F.col("adc"), shortlist)
+    return _top_k(with_cosine(short, "qv", "cv"), k)
+
+
 def pq_topk(
     index: PqIndex,
     queries: DataFrame,
@@ -826,37 +855,11 @@ def pq_topk(
     (:func:`_pq_codebook_sql` — same values as the pre-r14 scalar
     chains, ~20x smaller expression tree, no 64 KB codegen blowup).
     """
-    m, dsub = index.m, index.dsub
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    qt = q.withColumn("tabs", F.expr(_pq_tabs_sql(index.codebooks, "qv", dsub)))
+    qt = _pq_queries(index, queries, id_col, vec_col)
     cand = index.codes.crossJoin(F.broadcast(qt))
     if exclude_self:
         cand = cand.filter(F.col("qid") != F.col("cid"))
-    adc = F.expr(
-        " + ".join(
-            f"element_at(element_at(tabs, {j + 1}),"
-            f" element_at(codes, {j + 1}) + 1)"
-            for j in range(m)
-        )
-    )
-    ws = Window.partitionBy("qid").orderBy(F.col("adc"), F.col("cid"))
-    short = (
-        cand.withColumn("adc", adc)
-        .withColumn("sr", F.row_number().over(ws))
-        .filter(F.col("sr") <= shortlist)
-    )
-    scored = short.withColumn(
-        "cosine", _dot(F.col("qv"), F.col("cv")) / (_norm("qv") * _norm("cv"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    return _pq_rank(cand, index.m, k, shortlist)
 
 
 def pq_topk_oneshot(
@@ -871,9 +874,11 @@ def pq_topk_oneshot(
     seed: int = 42,
 ) -> DataFrame:
     """Convenience fit+probe in one call (the registry-query shape);
-    production reuses :func:`build_pq_index` across probe batches."""
+    production reuses :func:`build_pq_index` across probe batches.
+    Nothing is cached: the returned frame holds the only reference to
+    the index, so a cached one could never be released."""
     index = build_pq_index(
-        corpus, id_col, vec_col, m=m, bits=bits, seed=seed, cache=True
+        corpus, id_col, vec_col, m=m, bits=bits, seed=seed, cache=False
     )
     return pq_topk(
         index, queries, id_col, vec_col, k=k, shortlist=shortlist
@@ -900,8 +905,8 @@ def ivf_pq_topk(
     (m table lookups on m*bits-bit codes instead of d-float cosines),
     and exact cosine re-ranks only the ADC shortlist.
 
-    Plan shape: both indexes build once over the corpus (KMeans cells
-    + sample-trained codebooks), the code table joins the cell
+    Plan shape: both indexes build once over the corpus (sample-trained
+    centroids and codebooks), the code table joins the cell
     assignment on the id key, probes broadcast (bounded query set x
     n_probe cells, with the per-query ADC tables attached), and the
     candidate join is cell-local. Every stage is the already-certified
@@ -913,57 +918,13 @@ def ivf_pq_topk(
     pq = build_pq_index(
         corpus, id_col, vec_col, m=m, bits=bits, seed=seed, cache=False
     )
-    codes_cells = pq.codes.join(
-        ivf.cells.select("cid", "cell"), "cid"
-    )
-
-    cent_df = queries.sparkSession.createDataFrame(
-        [(i, c) for i, c in enumerate(ivf.centroids)], ["cell", "centroid"]
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    qt = q.withColumn("tabs", F.expr(_pq_tabs_sql(pq.codebooks, "qv", pq.dsub)))
-    dist2 = F.aggregate(
-        F.zip_with("qv", "centroid", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cell"))
-    probes = (
-        qt.crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", dist2)
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probe)
-        .select("qid", "qv", "tabs", "cell")
-    )
-
+    codes_cells = pq.codes.join(ivf.cells.select("cid", "cell"), "cid")
+    cent_df = _centroid_table(queries.sparkSession, ivf.centroids)
+    probes = _probe_cells(_pq_queries(pq, queries, id_col, vec_col), cent_df, n_probe)
     cand = codes_cells.join(F.broadcast(probes), "cell")
     if exclude_self:
         cand = cand.filter(F.col("qid") != F.col("cid"))
-    adc = F.expr(
-        " + ".join(
-            f"element_at(element_at(tabs, {j + 1}),"
-            f" element_at(codes, {j + 1}) + 1)"
-            for j in range(m)
-        )
-    )
-    ws = Window.partitionBy("qid").orderBy(F.col("adc"), F.col("cid"))
-    short = (
-        cand.withColumn("adc", adc)
-        .withColumn("sr", F.row_number().over(ws))
-        .filter(F.col("sr") <= shortlist)
-    )
-    scored = short.withColumn(
-        "cosine", _dot(F.col("qv"), F.col("cv")) / (_norm("qv") * _norm("cv"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    return _pq_rank(cand, pq.m, k, shortlist)
 
 
 def save_pq_index(index: PqIndex, path: str) -> None:
@@ -988,9 +949,9 @@ def save_pq_index(index: PqIndex, path: str) -> None:
 
 
 def load_pq_index(spark, path: str, cache: bool = True) -> PqIndex:
-    """Load a :func:`save_pq_index` index — no KMeans, no sample, no
-    retraining: the build cost is paid exactly once per corpus
-    version, across sessions and jobs."""
+    """Load a :func:`save_pq_index` index — no sample, no retraining:
+    the build cost is paid exactly once per corpus version, across
+    sessions and jobs."""
     cb_rows = (
         spark.read.parquet(path + "/codebooks")
         .orderBy("subspace", "code")
@@ -1012,7 +973,7 @@ def save_ivf_index(index: IvfIndex, path: str) -> None:
     (``<path>/cells``), the bounded centroid table as
     ``(cell, centroid)`` rows (``<path>/centroids``) — schema'd
     parquet through the Spark writers, so a later job can
-    :func:`load_ivf_index` and probe without refitting KMeans."""
+    :func:`load_ivf_index` and probe without retraining."""
     spark = index.cells.sparkSession
     index.cells.write.mode("overwrite").parquet(path + "/cells")
     spark.createDataFrame(
@@ -1022,7 +983,7 @@ def save_ivf_index(index: IvfIndex, path: str) -> None:
 
 
 def load_ivf_index(spark, path: str, cache: bool = True) -> IvfIndex:
-    """Load a :func:`save_ivf_index` index — no KMeans fit; the build
+    """Load a :func:`save_ivf_index` index — no retraining; the build
     cost is paid once per corpus version, across sessions and jobs."""
     cent = spark.read.parquet(path + "/centroids").orderBy("cell").collect()
     centroids = [list(r["centroid"]) for r in cent]
@@ -1065,14 +1026,24 @@ class Sq8Index:
         self.codes.unpersist()
 
 
-def _sq8_deq(codes_col, mn_arr, mx_arr):
-    """Dequantized array<double>: mn + code * (mx - mn) / 255."""
-    return F.transform(
-        codes_col,
-        lambda c, i: F.element_at(mn_arr, i + 1)
-        + c.cast("double")
-        * (F.element_at(mx_arr, i + 1) - F.element_at(mn_arr, i + 1))
-        / F.lit(255.0),
+def _sq8_bounds(mns: list[float], mxs: list[float]):
+    """The per-dimension bounds as two array literals."""
+    return F.array(*[F.lit(v) for v in mns]), F.array(*[F.lit(v) for v in mxs])
+
+
+def _sq8_decode(codes: DataFrame, index: Sq8Index) -> DataFrame:
+    """``codes`` plus ``dv``, the dequantized array<double>:
+    mn + code * (mx - mn) / 255."""
+    mn_arr, mx_arr = _sq8_bounds(index.mns, index.mxs)
+    return codes.withColumn(
+        "dv",
+        F.transform(
+            F.col("codes"),
+            lambda c, i: F.element_at(mn_arr, i + 1)
+            + c.cast("double")
+            * (F.element_at(mx_arr, i + 1) - F.element_at(mn_arr, i + 1))
+            / F.lit(255.0),
+        ),
     )
 
 
@@ -1090,10 +1061,7 @@ def build_sq8_index(
     (constant dimensions encode as 0). Codes are exact integers, so
     the index is partition- and replay-invariant by construction.
     """
-    c = spread_small_scan(corpus).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
+    c = _vectors(spread_small_scan(corpus), id_col, vec_col)
     stats = (
         c.select(F.posexplode("cv").alias("d", "x"))
         .groupBy("d")
@@ -1103,8 +1071,7 @@ def build_sq8_index(
     )
     mns = [r.mn for r in stats]
     mxs = [r.mx for r in stats]
-    mn_arr = F.array(*[F.lit(v) for v in mns])
-    mx_arr = F.array(*[F.lit(v) for v in mxs])
+    mn_arr, mx_arr = _sq8_bounds(mns, mxs)
     enc = F.transform(
         "cv",
         lambda x, i: F.when(
@@ -1123,6 +1090,30 @@ def build_sq8_index(
     if cache:
         codes = codes.persist()
     return Sq8Index(codes, mns, mxs)
+
+
+def _sq8_rank(
+    cand: DataFrame,
+    q: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    shortlist: int,
+) -> DataFrame:
+    """SQ8 scoring of a ``(qid, qv, cid, dv)`` candidate frame: the
+    ``shortlist`` best per query by dequantized cosine, then exact
+    cosine against the raw vectors. The raw corpus vectors enter only
+    here, by a shortlist-sized equi join (<= |q| * shortlist rows),
+    never through the candidate scan (ADVICE r7)."""
+    approx = cand.select("qid", "cid", _cosine("dv", "qv").alias("approx"))
+    short = _shortlist(approx, F.desc("approx"), shortlist).select("qid", "cid")
+    exact = (
+        short.join(_vectors(corpus, id_col, vec_col), "cid")
+        .join(F.broadcast(q), "qid")
+        .select("qid", "cid", _cosine("cv", "qv").alias("cosine"))
+    )
+    return _top_k(exact, k)
 
 
 def sq8_topk(
@@ -1144,52 +1135,11 @@ def sq8_topk(
     vectors are touched only by the shortlist-sized rescore join);
     both rankings tie-break on cid, so results are deterministic.
     """
-    mn_arr = F.array(*[F.lit(v) for v in index.mns])
-    mx_arr = F.array(*[F.lit(v) for v in index.mxs])
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    deq = _sq8_deq(F.col("codes"), mn_arr, mx_arr)
-    scored = index.codes.withColumn("dv", deq).crossJoin(F.broadcast(q))
+    q = _vectors(queries, id_col, vec_col, "qid", "qv")
+    cand = _sq8_decode(index.codes, index).crossJoin(F.broadcast(q))
     if exclude_self:
-        scored = scored.filter(F.col("qid") != F.col("cid"))
-    approx = scored.select(
-        "qid",
-        "cid",
-        (
-            _dot(F.col("dv"), F.col("qv"))
-            / (_norm(F.col("dv")) * _norm(F.col("qv")))
-        ).alias("approx"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("approx"), "cid")
-    short = (
-        approx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= shortlist)
-        .select("qid", "cid")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    exact = (
-        short.join(cv, "cid")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "cid",
-            (
-                _dot(F.col("cv"), F.col("qv"))
-                / (_norm(F.col("cv")) * _norm(F.col("qv")))
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.desc("cosine"), "cid")
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+        cand = cand.filter(F.col("qid") != F.col("cid"))
+    return _sq8_rank(cand, q, corpus, id_col, vec_col, k, shortlist)
 
 
 def save_sq8_index(index: Sq8Index, path: str) -> None:
@@ -1247,59 +1197,13 @@ def ivf_sq8_topk(
         corpus, id_col, vec_col, n_cells=n_cells, seed=seed, cache=False
     )
     sq = build_sq8_index(corpus, id_col, vec_col, cache=False)
-    # ADC frame carries ONLY (cid, cell, codes) — the raw float64
-    # vectors must NOT ride along through the cell scan, or SQ8's
-    # memory-bounding point (int8 codes 8x smaller than the vectors)
-    # is negated; they are fetched by a shortlist-sized join for the
-    # exact rescore below, exactly as sq8_topk does (ADVICE r7).
-    codes_cells = sq.codes.join(ivf.cells.select("cid", "cell"), "cid")
-
-    cent_df = queries.sparkSession.createDataFrame(
-        [(i, c) for i, c in enumerate(ivf.centroids)], ["cell", "centroid"]
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    dist2 = F.aggregate(
-        F.zip_with("qv", "centroid", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", dist2)
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probe)
-        .select("qid", "qv", "cell")
-    )
-
-    mn_arr = F.array(*[F.lit(v) for v in sq.mns])
-    mx_arr = F.array(*[F.lit(v) for v in sq.mxs])
-    cand = codes_cells.join(F.broadcast(probes), "cell")
+    # The code table joins the cell assignment as (cid, cell, codes)
+    # only, and dequantizes after that shuffle: the float64 vectors
+    # (raw or dequantized) never cross an exchange.
+    codes_cells = _sq8_decode(sq.codes.join(ivf.cells.select("cid", "cell"), "cid"), sq)
+    cent_df = _centroid_table(queries.sparkSession, ivf.centroids)
+    q = _vectors(queries, id_col, vec_col, "qid", "qv")
+    cand = codes_cells.join(F.broadcast(_probe_cells(q, cent_df, n_probe)), "cell")
     if exclude_self:
         cand = cand.filter(F.col("qid") != F.col("cid"))
-    deq = _sq8_deq(F.col("codes"), mn_arr, mx_arr)
-    approx = cand.withColumn("dv", deq).withColumn(
-        "approx",
-        _dot(F.col("dv"), F.col("qv")) / (_norm(F.col("dv")) * _norm(F.col("qv"))),
-    )
-    ws = Window.partitionBy("qid").orderBy(F.desc("approx"), F.col("cid"))
-    short = (
-        approx.withColumn("sr", F.row_number().over(ws))
-        .filter(F.col("sr") <= shortlist)
-        .select("qid", "qv", "cid")
-    )
-    # Raw vectors enter only here: shortlist-sized equi join (<= q * s
-    # rows), never the full candidate scan.
-    cv = ivf.cells.select("cid", "cv")
-    scored = short.join(cv, "cid").withColumn(
-        "cosine", _dot(F.col("cv"), F.col("qv")) / (_norm("cv") * _norm("qv"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.col("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    return _sq8_rank(cand, q, corpus, id_col, vec_col, k, shortlist)

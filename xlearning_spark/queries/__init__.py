@@ -203,7 +203,8 @@ GRADED_SPARES = [
 #: never occupy a graded slot. Since r5 each family here has a
 #: HASH-CERTIFIED portable twin (q85 for q16's HLL, q86 for q48's
 #: MinHash-LSH, q87 for q49's SimHash, q50 already certifying the LSH
-#: ANN family beside q52's KMeans-based IVF) — these four stay
+#: ANN family beside q52's IVF, whose centroids come from a numpy
+#: Lloyd's that SQL does not replay) — these four stay
 #: registered as the fast engine-native/xxhash64 production forms.
 # (q120_learned_quality_lr, registered as a spare in r10, rotated INTO
 # the window in r11 alongside the new q121 — VERDICT r10 items 2-3.
@@ -216,7 +217,7 @@ ROWS_ONLY = [
     "q48_minhash_neardup",
     "q49_simhash_sketch",
     "q52_ivf_ann_topk",
-    "q100_pq_ann_topk",  # product-quantization ANN (KMeans codebooks; recall + reuse gates in tests, r5)
+    "q100_pq_ann_topk",  # product-quantization ANN (numpy Lloyd codebooks; recall + reuse gates in tests, r5)
 ]
 
 GRADING_ORDER = GRADING_WINDOW + GRADED_SPARES + ROWS_ONLY

@@ -6,7 +6,8 @@ Jaccard, embedding-cosine near-dup, text stats, quality scoring,
 language ID, brute-force cosine top-k) carry full DuckDB oracles — as
 does hyperplane-LSH ANN (q50), whose deterministic LCG plane draw the
 oracle replays literal-for-literal. Only the xxhash64-seeded sketches
-(MinHash, SimHash) and the KMeans-backed IVF are not SQL-reproducible;
+(MinHash, SimHash) and the Lloyd-trained IVF and PQ (numpy centroids)
+are not SQL-reproducible;
 those register rows-only and get recall-vs-exact assertions in
 tests/test_llm_ops.py.
 
@@ -624,9 +625,10 @@ def q51_bpe_token_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q52_ivf_ann_topk",
-    oracle=None,  # KMeans cell assignment: approximate by design
+    oracle=None,  # numpy Lloyd centroids: approximate by design
     tags=("llm", "L3", "ivf", "approx"),
-    doc="IVF (inverted-file) ANN top-k: KMeans coarse cells + n_probe "
+    doc="IVF (inverted-file) ANN top-k: Lloyd's coarse cells trained on "
+    "a bounded hash-ordered sample + n_probe "
     "cell scan + exact re-rank (operators/similarity.py ivf_topk); "
     "recall vs q46 asserted in tests/test_llm_ops.py.",
 )
@@ -985,7 +987,7 @@ def q84_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     "F.aggregate greedy merge; deterministic argmax, so the merge list "
     "is partition-invariant), apply_bpe re-tokenizes the corpus with "
     "the learned rules and the query emits per-doc subword counts. "
-    "Rows-only like q52's KMeans: per-iteration argmax isn't "
+    "Rows-only like q52's Lloyd centroids: per-iteration argmax isn't "
     "SQL-replayable — certification is tests/test_llm_ops.py's exact "
     "agreement with an independent reference implementation on the "
     "real sf0.001 corpus plus partition-invariance and round-trip "
@@ -1793,10 +1795,10 @@ def q99_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q100_pq_ann_topk",
-    oracle=None,  # KMeans codebooks: approximate by design
+    oracle=None,  # numpy Lloyd codebooks: approximate by design
     tags=("llm", "L3", "pq", "approx"),
     doc="Product-quantization ANN top-k (Jégou et al. TPAMI 2011): "
-    "per-subspace KMeans codebooks compress each vector to m small "
+    "per-subspace Lloyd's codebooks compress each vector to m small "
     "codes (m*bits bits vs d floats — the memory-bounded scan for "
     "exhaustive candidate scoring at 100 TB), queries score via "
     "asymmetric distance (m table lookups per candidate, zero "
@@ -2372,8 +2374,8 @@ def q122_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------
 # L3 (certification): frozen-centroid IVF probe — hash-certifies the
-# assign/probe ALGEBRA that q52's KMeans form can't (KMeans centroids
-# are not SQL-reproducible). Same device as q114's SQ8 twin: every
+# assign/probe ALGEBRA that q52's trained form can't (its numpy Lloyd
+# centroids are not SQL-reproducible). Same device as q114's SQ8 twin: every
 # stage of the index math is replayed verbatim in the DuckDB oracle.
 # --------------------------------------------------------------------
 
@@ -2422,8 +2424,8 @@ WHERE rn <= 5
     doc="Frozen-centroid IVF probe (operators/similarity.assign_cells "
     "+ ivf_probe over an IvfIndex whose centroids are the literal "
     "embeddings of vec_id 0-7 — deterministic on both engines, no "
-    "KMeans): hash-certifies the IVF banding/assignment ALGEBRA that "
-    "the KMeans production form q52 can only recall-gate (VERDICT r12 "
+    "training): hash-certifies the IVF banding/assignment ALGEBRA that "
+    "the trained production form q52 can only recall-gate (VERDICT r12 "
     "item 2; q114's SQ8 device applied to the inverted-file rung of "
     "the L3 ladder). The oracle replays every stage — index-order "
     "squared-distance folds (list_dot_product of the difference list "
@@ -2434,7 +2436,7 @@ WHERE rn <= 5
     "(cosine DESC, cid) top-5 window. 100 TB: assignment is map-side "
     "zero-shuffle (centroid literals in-plan), probes scan only "
     "corpus*n_probe/n_cells, and the driver only ever holds the 8 "
-    "centroid rows; q52 stays the production KMeans form.",
+    "centroid rows; q52 stays the production trained form.",
 )
 def q123_frozen_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xlearning_spark.operators.similarity import (

@@ -947,8 +947,8 @@ def ann_ingest(
     without a streaming form): every landed micro-batch of embeddings
     is assigned to the persisted IVF index's FROZEN centroids
     (operators/similarity.assign_cells — the classic train-then-add
-    discipline: the expensive KMeans fit happened once at
-    ``save_ivf_index`` time; adds never refit) and appended to the
+    discipline: the centroids were trained once, on a bounded sample,
+    by ``build_ivf_index``; adds never retrain) and appended to the
     index's inverted file, so the next ``load_ivf_index`` +
     ``ivf_probe`` sees the new vectors at marginal cost.
 
